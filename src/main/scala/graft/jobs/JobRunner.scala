@@ -13,8 +13,12 @@ import graft.sink.{Catalog, JdbcSink, SinkOps}
   * scan a queue directory for `*-job.json`, and per job: glob input CSVs
   * newest-first, per file read → order-sensitive PK dedupe → type-infer →
   * ensure/truncate/upsert sink table → restamp resource description →
-  * compute requested stats over the accumulated table → archive the input
-  * to processed/ (or problems/ on failure), logging DUPES/PROCESSED/ELAPSED.
+  * archive the input to processed/ (or problems/ on failure), logging
+  * DUPES/PROCESSED/ELAPSED. After the files, and only in a sweep that
+  * upserted at least one of them, the requested stats run over one
+  * read-back of the accumulated table, one driver thread per stat table
+  * (`runStats`); every failing stat is logged to problems.log before
+  * the job fails.
   *
   * Beyond the reference's one job shape, the queue also drives the corpus
   * lifecycle: `"Kind":"CorpusBuild"` bootstraps a corpus
@@ -183,13 +187,60 @@ class JobRunner(
           FileResult(f, -1, -1, 0)
       }
     }
-    // stats over the ACCUMULATED table (re-read from the sink, the
-    // reference's scan_http_csv, datapump.py:375-376)
-    if (job.stats.nonEmpty && sink.tableExists(table)) {
-      val acc = sink.readBack(spark, table)
-      job.stats.foreach(st => runStat(st, acc, table, job))
-    }
+    // the reference computes stats inside the per-file flow
+    // (datapump.py:634-638), so a sweep that upserted no file computes
+    // none; a successful file has created the table
+    if (job.stats.nonEmpty && results.exists(_.rows >= 0))
+      runStats(job, table)
     JobResult(table, results)
+  }
+
+  /** Stats over the ACCUMULATED table, re-read from the sink (the
+    * reference's scan_http_csv, datapump.py:375-376), one driver thread
+    * per stat table. The stats are bound by per-job latency (mostly
+    * single-task jobs), so overlapping them makes the step cost its
+    * slowest table instead of the sum. Stats sharing a table (`H` and
+    * `h`) run in spec order on one thread, so their upserts land in the
+    * sequential order; distinct tables are disjoint, so the results equal
+    * a sequential run. The threads are started here, by the sweeping
+    * thread, so they inherit its Spark local properties (job group,
+    * scheduler pool), and all are joined before this returns. Every
+    * failing stat is logged on one line naming its table; then the first
+    * failure in spec order is rethrown and fails the job. */
+  private def runStats(job: Job, table: String): Unit = {
+    val acc = sink.readBack(spark, table)
+    val targets = job.stats.map(st => s"${table}__${st.kind.toLowerCase}")
+    val failures = new Array[Throwable](job.stats.size)
+    val threads = targets.distinct.map { t =>
+      val group = job.stats.indices.filter(targets(_) == t)
+      new Thread(() => group.foreach { i =>
+        try runStat(job.stats(i), acc, t)
+        catch { case e: Throwable => failures(i) = e }
+      }, s"stats-$t")
+    }
+    threads.foreach(_.start())
+    joinAll(threads)
+    // one line per failed stat (analysis errors carry multi-line plans)
+    for (i <- failures.indices if failures(i) != null) {
+      val msg = String.valueOf(failures(i).getMessage)
+      log(s"$problemsDir/problems.log",
+        s"${targets(i)} STAT ${job.stats(i).kind} FAILED: " +
+          msg.replaceAll("\\s*\n\\s*", " "))
+    }
+    failures.find(_ != null).foreach(e => throw e)
+  }
+
+  /** Joins every thread even if this one is interrupted meanwhile (no
+    * stats thread or its Spark job may outlive the sweep); the interrupt
+    * is re-asserted afterwards. */
+  private def joinAll(threads: Seq[Thread]): Unit = {
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
   }
 
   private def processFile(path: String, job: Job, table: String)
@@ -223,22 +274,20 @@ class JobRunner(
     } finally stamped.unpersist()
   }
 
-  private def runStat(st: StatSpec, acc: DataFrame, table: String,
-      job: Job): Unit = {
-    val statTable = s"${table}__${st.kind.toLowerCase}"
+  private def runStat(st: StatSpec, acc: DataFrame, target: String): Unit =
     st.kind match {
       case "descriptive" =>
         // describe(include='all') — ALL columns, with unique/top/freq rows,
         // matching the reference's pandas describe (datapump.py:331-336)
         val out = Stats.describeAll(acc, acc.columns.toSeq)
-        sink.ensureTable(statTable, out.schema, Seq("stat"))
-        sink.upsert(out, statTable, Seq("stat"))
+        sink.ensureTable(target, out.schema, Seq("stat"))
+        sink.upsert(out, target, Seq("stat"))
       case "mode" =>
         val out = Stats.modeAll(acc,
           acc.columns.filterNot(_ == datecolumn).toSeq)
-        sink.ensureTable(statTable, out.schema, Seq("row_idx"))
-        sink.truncate(statTable) // mode rows are positional, not keyed
-        sink.upsert(out, statTable, Seq("row_idx"))
+        sink.ensureTable(target, out.schema, Seq("row_idx"))
+        sink.truncate(target) // mode rows are positional, not keyed
+        sink.upsert(out, target, Seq("row_idx"))
       case freq =>
         // frequency stat: resample mean grouped by GroupBy, after dropping
         // DropColumns (datapump.py:287-327). The stat is computed from the
@@ -251,10 +300,9 @@ class JobRunner(
         }.toSeq
         val out = TimeSeries.resampleMean(
           kept, datecolumn, freq, st.groupBy, valueCols)
-        sink.ensureTable(statTable, out.schema, st.groupBy :+ datecolumn)
-        sink.upsert(out, statTable, st.groupBy :+ datecolumn)
+        sink.ensureTable(target, out.schema, st.groupBy :+ datecolumn)
+        sink.upsert(out, target, st.groupBy :+ datecolumn)
     }
-  }
 
   private def archive(file: String, destDir: String): Unit = {
     val src = Paths.get(file.stripPrefix("file:"))

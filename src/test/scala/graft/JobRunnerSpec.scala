@@ -54,14 +54,26 @@ class JobRunnerSpec extends SparkSpec {
       (s"""{"InputFile":"$samples/*.csv","TargetOrg":"etl-test",
           |"TargetPackage":"iot-test","TargetResource":"air-quality",
           |"PrimaryKey":"DateTime,Sensor_id","Dedupe":"last",
-          |"Stats":[{"Kind":"descriptive"},
-          |         {"Kind":"H","GroupBy":"Sensor_id","DropColumns":"LAT,LONG"}]}"""
+          |"Stats":[{"Kind":"descriptive"},{"Kind":"mode"},
+          |         {"Kind":"H","GroupBy":"Sensor_id","DropColumns":"LAT,LONG"},
+          |         {"Kind":"h","GroupBy":"Sensor_id","DropColumns":"LAT,LONG"}]}"""
         .stripMargin).getBytes)
 
     val sink = JdbcSink("jdbc:derby:memory:e2e;create=true")
     val runner = new JobRunner(spark, sink, input.toString, processed, problems)
-    val results = runner.runAll()
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val jobs = new JobTally("e2e")
+    val results = jobs.sweep(runner)
     assert(results.size == 1 && results.head._2.isRight)
+    // the stats threads inherit the sweeping thread's job group, and
+    // neither a thread nor a job outlives the sweep
+    assert(jobs.inGroup > 0 && jobs.outsideGroup == 0 && jobs.running == 0)
+    assert(statsThreads.isEmpty, statsThreads)
+    // the sweep leaves nothing persisted (the read-back is not cached);
+    // the stats' local checkpoints are released once unreachable
+    assert(eventually(
+      spark.sparkContext.getPersistentRDDs.keySet == persisted),
+      spark.sparkContext.getPersistentRDDs)
 
     // data table: new.csv processed first, old.csv (older mtime) last ->
     // old.csv's keep-last value (12.0) wins over new.csv's 99.0
@@ -78,6 +90,14 @@ class JobRunnerSpec extends SparkSpec {
     // the full pandas row set — count/unique/top/freq + 7 numeric moments
     assert(sink.recordCount(s"${table}__descriptive") == 11)
     assert(sink.recordCount(s"${table}__h") == 2) // two hourly buckets
+    // mode and the shared __h table (H, then h) hold exactly what the ops
+    // compute over the accumulated read-back
+    val acc = sink.readBack(spark, table)
+    assert(rowSet(sink.readBack(spark, s"${table}__mode")) == rowSet(
+      graft.ops.Stats.modeAll(acc, acc.columns.filterNot(_ == "DateTime"))))
+    assert(rowSet(sink.readBack(spark, s"${table}__h")) == rowSet(
+      graft.ops.TimeSeries.resampleMean(acc.drop("LAT", "LONG"), "DateTime",
+        "h", Seq("Sensor_id"), Seq("pm25"))))
 
     // archive semantics: 2 good files moved to processed/, poison to problems/
     assert(Paths.get(processed, "old.csv").toFile.exists)
@@ -91,6 +111,142 @@ class JobRunnerSpec extends SparkSpec {
     val logged = Files.readAllLines(Paths.get(processed, "processed.log"))
     assert(logged.asScala.exists(l => l.contains("old.csv") &&
       l.contains("DUPES: 1") && l.contains("PROCESSED: 2")))
+  }
+
+  test("a sweep that upserts no file computes no stats") {
+    val (runner, sink, samples) = sensorQueue("nostats",
+      """{"Kind":"descriptive"},{"Kind":"mode"},
+        |{"Kind":"H","GroupBy":"Sensor_id","DropColumns":"LAT,LONG"}"""
+        .stripMargin)
+    Files.write(samples.resolve("a.csv"), sensorCsv.getBytes)
+    assert(runner.runAll().head._2.isRight)
+    val table = "etl_test__iot_test__air_quality"
+    val statTables = Seq("descriptive", "mode", "h").map(k => s"${table}__$k")
+    def contents = statTables.map(t => rowSet(sink.readBack(spark, t)))
+    val before = contents
+    assert(before.forall(_.nonEmpty))
+
+    // the queue is empty now: the resident job sweeps, upserts nothing,
+    // and must not re-run the stats (no Spark job at all)
+    val jobs = new JobTally("nostats")
+    val again = jobs.sweep(runner)
+    assert(again.size == 1 && again.head._2.isRight)
+    assert(jobs.inGroup == 0 && jobs.outsideGroup == 0, jobs.inGroup)
+    assert(contents == before)
+  }
+
+  test("every failing stat is logged by table; the job fails, the " +
+      "other stats land, no stats thread or job outlives the sweep") {
+    val (runner, sink, samples) = sensorQueue("badstats",
+      """{"Kind":"descriptive"},{"Kind":"H","GroupBy":"Nope"},
+        |{"Kind":"D","GroupBy":"Nope"}""".stripMargin)
+    Files.write(samples.resolve("a.csv"), sensorCsv.getBytes)
+    val jobs = new JobTally("badstats")
+    val res = jobs.sweep(runner)
+    assert(res.size == 1 && res.head._2.isLeft)
+    assert(res.head._2.swap.toOption.get.contains("Nope"))
+    assert(jobs.running == 0 && statsThreads.isEmpty, statsThreads)
+
+    val table = "etl_test__iot_test__air_quality"
+    val problems = Files.readAllLines(
+      samples.getParent.resolve("problems").resolve("problems.log")).asScala
+    val statLines = Seq("h" -> "H", "d" -> "D").map { case (t, k) =>
+      problems.indexWhere(l => l.startsWith(s"${table}__$t STAT $k FAILED") &&
+        l.contains("Nope"))
+    }
+    assert(statLines.forall(_ >= 0), problems)
+    // the job's own FAILED line follows every stat line
+    assert(problems.indexWhere(_.contains("sensors-job.json FAILED")) >
+      statLines.max, problems)
+    assert(sink.recordCount(s"${table}__descriptive") == 11)
+  }
+
+  private val sensorCsv =
+    "DateTime,Sensor_id,LAT,LONG,pm25\n" +
+      "2024-01-01 10:00:00,s1,1.0,2.0,10.0\n" +
+      "2024-01-01 10:30:00,s2,1.0,2.0,14.0\n" +
+      "2024-01-01 11:00:00,s1,1.0,2.0,20.0\n"
+
+  /** A queue holding one resident sensor job with the given `Stats`
+    * items, over a fresh Derby database; files land in the returned
+    * samples dir. */
+  private def sensorQueue(name: String, stats: String) = {
+    val base = Files.createTempDirectory(s"graft-$name")
+    val input = base.resolve("input"); Files.createDirectories(input)
+    val samples = base.resolve("samples"); Files.createDirectories(samples)
+    Files.write(input.resolve("sensors-job.json"),
+      (s"""{"InputFile":"$samples/*.csv","TargetOrg":"etl-test",
+          |"TargetPackage":"iot-test","TargetResource":"air-quality",
+          |"PrimaryKey":"DateTime,Sensor_id","Dedupe":"last",
+          |"Stats":[$stats]}""".stripMargin).getBytes)
+    val sink = JdbcSink(s"jdbc:derby:memory:$name;create=true")
+    val runner = new JobRunner(spark, sink, input.toString,
+      base.resolve("processed").toString, base.resolve("problems").toString)
+    (runner, sink, samples)
+  }
+
+  /** Order-insensitive content of a frame: its rows as strings, columns
+    * in name order (sink read-backs widen ints to longs). */
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[String]] =
+    df.select(df.columns.sorted.map(c =>
+        org.apache.spark.sql.functions.col(c).cast("string")).toIndexedSeq: _*)
+      .collect().map(_.toSeq.map(String.valueOf)).toSet
+
+  /** Threads the runner's stats step started that are still alive. */
+  private def statsThreads: Seq[String] = {
+    val names = Seq.newBuilder[String]
+    Thread.getAllStackTraces.keySet.forEach { t =>
+      if (t.isAlive && t.getName.startsWith("stats-")) names += t.getName
+    }
+    names.result()
+  }
+
+  private def eventually(cond: => Boolean): Boolean =
+    (1 to 20).exists { _ =>
+      cond || { System.gc(); Thread.sleep(250); cond }
+    }
+
+  /** Counts the Spark jobs of one sweep by job group. The sweep runs
+    * under its own group; a sentinel job under another group then fences
+    * the listener bus, which delivers job events in submission order. */
+  private class JobTally(name: String)
+      extends org.apache.spark.scheduler.SparkListener {
+    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
+    private val started = new java.util.concurrent.ConcurrentHashMap[Int, String]
+    private val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    private val group = s"jobtally-$name-${System.nanoTime()}"
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      started.put(e.jobId, Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
+
+    private def groups: Seq[String] = {
+      val b = Seq.newBuilder[String]
+      started.forEach((_, g) => b += g)
+      b.result()
+    }
+    private val fence = "jobtally-fence"
+    def inGroup: Int = groups.count(_ == group)
+    def outsideGroup: Int = groups.count(g => g != group && g != fence)
+    def running: Int = started.keySet.stream
+      .filter(id => !ended.contains(id) && started.get(id) != fence).count.toInt
+
+    def sweep(runner: JobRunner) = {
+      val sc = spark.sparkContext
+      sc.addSparkListener(this)
+      try {
+        sc.setJobGroup(group, name)
+        val res = try runner.runAll() finally sc.clearJobGroup()
+        sc.setJobGroup(fence, fence)
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        val deadline = System.nanoTime() + 60e9.toLong
+        while (!groups.contains(fence) && System.nanoTime() < deadline)
+          Thread.sleep(20)
+        assert(groups.contains(fence), "listener bus did not drain")
+        res
+      } finally sc.removeSparkListener(this)
+    }
   }
 
   test("corpus kinds: queue drives bootstrap + delta end-to-end; " +
