@@ -1,5 +1,6 @@
 package graft
 import java.util.Locale
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every `SparkEntry.queries` entry at the SF dir in
@@ -41,6 +42,7 @@ import org.apache.spark.sql.SparkSession
   * timing — a silent catch here is the exact mechanism that hid 14
   * broken entries across rounds 9-10 (the TIMESTAMP_NTZ read bug), and
   * `"value"`/`"queries"` only ever aggregate queries that actually ran.
+  * A failed `bench_out.json` write fails the run.
   *
   * MEDIAN-OF-N TIMING + LOADAVG: each query is timed over
   * `SPARK_GRAFT_BENCH_PASSES` (default 3) post-warmup passes and the
@@ -55,7 +57,7 @@ import org.apache.spark.sql.SparkSession
   * entry (each child is this same main with a 1-entry filter — warmup
   * + median-of-N inside its own fresh heap) and merges the children's
   * lines into one artifact of the identical shape. This is the
-  * attribution-grade protocol tools/isobench.sh ran by hand since r12,
+  * attribution-grade protocol run by hand (one entry per JVM) since r12,
   * folded into the committed artifact itself: in-suite numbers share a
   * JVM, so an allocation-heavy neighbor's heap state can bleed into a
   * timing (three phantom >1.5× in-suite swings were re-adjudicated by
@@ -63,7 +65,8 @@ import org.apache.spark.sql.SparkSession
   * structurally impossible. Cost: one ~10s Spark session bring-up per
   * entry, so this is the sf1 deep-measurement mode, not the per-round
   * sf0.1 default. The merged line carries `"isolated":true` and the
-  * MAX child loadavg.
+  * MAX child loadavg. Children inherit this process's environment and
+  * stderr, so a failing child's stack trace reaches the run log.
   */
 object Bench {
   // 1-minute system load average; -1.0 if the JVM can't provide one
@@ -71,6 +74,27 @@ object Bench {
     try java.lang.management.ManagementFactory.getOperatingSystemMXBean
       .getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
+
+  // contention self-flagging (VERDICT r16 #5): a loaded box inflates
+  // every number; the artifact carries the verdict so a scoreboard
+  // reader never mistakes contention for regression
+  private def loadMax: Double = sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
+    .flatMap(_.toDoubleOption).getOrElse(3.0)
+
+  // NAME-SORTED execution: the map's hash order reshuffles whenever an
+  // entry is added, which silently changes every query's predecessor
+  // between rounds — allocation-heavy queries (ImageIO decodes) were
+  // measured 3× slower purely from inherited heap state of a new
+  // neighbor. Sorted order keeps per-query neighborhoods identical
+  // across rounds, so round-over-round deltas measure the query.
+  // dev-only subset filter (comma-separated names); the driver never
+  // sets it, so round benches always time the full suite
+  private def selected = {
+    val only: Option[Set[String]] =
+      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => only.forall(_.contains(n)) }
+  }
 
   def main(args: Array[String]): Unit = {
     // sampled at PROCESS ENTRY, before any Spark work: the bench's own
@@ -80,37 +104,11 @@ object Bench {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     if (sys.env.get("SPARK_GRAFT_ISOLATE").contains("1")) {
-      runIsolated(sfDir)
+      runIsolated(sfDir, loadStart)
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // bounded AvailableNow runs never need background state snapshots;
-      // the default 60s maintenance thread racing session shutdown is
-      // the RpcEnv exception spew that flooded BENCH_r09's tail. 86400s
-      // effectively disables it for any realistic run length (600s could
-      // still re-arm on a >10-minute tail).
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "86400s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // NAME-SORTED execution: the map's hash order reshuffles whenever an
-    // entry is added, which silently changes every query's predecessor
-    // between rounds — allocation-heavy queries (ImageIO decodes) were
-    // measured 3× slower purely from inherited heap state of a new
-    // neighbor. Sorted order keeps per-query neighborhoods identical
-    // across rounds, so round-over-round deltas measure the query.
-    // dev-only subset filter (comma-separated names); the driver never
-    // sets it, so round benches always time the full suite
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val spark = LocalSession()
+    val ordered = selected
 
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -118,7 +116,7 @@ object Bench {
     // pass 1 — untimed warmup (errors ignored; the timed pass reports them)
     ordered.foreach { case (name, fn) =>
       try materialize(fn(spark, sfDir))
-      catch { case _: Throwable => System.err.println(s"[warmup] $name failed") }
+      catch { case NonFatal(_) => System.err.println(s"[warmup] $name failed") }
     }
 
     // timed passes: median-of-N per query. A failure is recorded (first
@@ -165,17 +163,11 @@ object Bench {
       }
     }
     val loadAfter = loadavg()
-    val load = math.max(loadBefore, loadAfter)
     val fixtureBuilds = graft.queries.Fixtures.missCount - fixturesBefore
     if (fixtureBuilds > 0)
       System.err.println(s"[bench] WARNING: $fixtureBuilds fixture " +
         "build(s) happened INSIDE the timed passes — timings include " +
         "one-time fixture construction")
-    // contention self-flagging (VERDICT r16 #5): a loaded box inflates
-    // every number; the artifact carries the verdict so a scoreboard
-    // reader never mistakes contention for regression
-    val loadMax = sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
-      .flatMap(_.toDoubleOption).getOrElse(3.0)
     val contended = loadStart > loadMax
     if (contended)
       System.err.println(f"[bench] WARNING: pre-run loadavg $loadStart%.2f " +
@@ -186,48 +178,60 @@ object Bench {
       val s = xs.sorted
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
-    val results = timings.map { case (k, v) => k -> median(v) }.toMap
+    // both lines print AFTER spark.stop(): r9's shutdown spewed
+    // state-store maintenance stack traces that pushed a pre-stop JSON
+    // line out of the driver's ~2000-char tail window ("parsed": null).
+    // With stop() already done, nothing can print after the lines but
+    // sbt's trailer.
+    try spark.stop() catch { case NonFatal(_) => }
+    emit(sfDir, timings.map { case (k, v) => k -> median(v) }.toMap.toSeq,
+      errors, passes, isolated = false, math.max(loadBefore, loadAfter),
+      loadStart, contended, fixtureBuilds)
+  }
 
+  /** Prints the FULL per-query line (also written to `bench_out.json`),
+    * with `timings` in the given order, then the COMPACT line (top 30
+    * queries by cost) last. */
+  private def emit(sfDir: String, timings: Seq[(String, Double)],
+      errors: collection.Map[String, String], passes: Int,
+      isolated: Boolean, load: Double, loadStart: Double,
+      contended: Boolean, fixtureBuilds: Long): Unit = {
     // locale-pinned plain-decimal rendering: no scientific notation, no
     // locale comma separators — the line must stay machine-parseable JSON
     def num(v: Double): String = "%.4f".formatLocal(Locale.US, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
+    def obj(qs: Seq[(String, Double)]): String =
+      qs.map { case (k, v) => "\"" + k + "\":" + num(v) }
+        .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = timings.map(_._2).sum
     // numeric sf parsed from the dir name ("…/sf0.1" -> 0.1)
     val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       .map(_.group(1).stripSuffix(".")).getOrElse("0")
-    val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,""" +
-      s""""errors":$errJson,"passes":$passes,"loadavg":${num(load)},""" +
+    val iso = if (isolated) "\"isolated\":true," else ""
+    val tail =
+      s""""passes":$passes,$iso"loadavg":${num(load)},""" +
       s""""loadavg_start":${num(loadStart)},"contended":$contended,""" +
-      s""""fixture_builds":$fixtureBuilds,"sf":$sf}"""
-    try java.nio.file.Files.writeString(
+      s""""fixture_builds":$fixtureBuilds,"""
+    val line =
+      s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
+      s""""queries":${obj(timings)},""" +
+      s""""errors":$errJson,$tail"sf":$sf}"""
+    java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_out.json"), line + "\n")
-    catch { case _: Throwable => }
     println(line)
-    // compact tail-parseable summary: top 30 queries by cost (~900 chars).
-    // Printed AFTER spark.stop(): r9's shutdown spewed state-store
-    // maintenance stack traces that pushed a pre-stop JSON line out of
-    // the driver's ~2000-char tail window ("parsed": null). With stop()
-    // already done, nothing can print after this line but sbt's trailer.
-    val top = results.toSeq.sortBy(-_._2).take(30)
-    val topQs = top.map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
+    // compact tail-parseable summary (~900 chars): the full line cannot
+    // sit complete inside the driver's tail window
+    val top = timings.sortBy(-_._2).take(30)
     // errors ride the compact line too (truncated if huge — a non-empty
     // object is the signal; full detail is in bench_out.json)
     val compactErr = if (errJson.length <= 400) errJson
       else "{\"error_count\":" + errors.size + "}"
     val compact =
       s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-      s""""queries":$topQs,"queries_omitted":${results.size - top.size},""" +
-      s""""errors":$compactErr,"passes":$passes,"loadavg":${num(load)},""" +
-      s""""loadavg_start":${num(loadStart)},"contended":$contended,""" +
-      s""""fixture_builds":$fixtureBuilds,""" +
+      s""""queries":${obj(top)},"queries_omitted":${timings.size - top.size},""" +
+      s""""errors":$compactErr,$tail""" +
       s""""queries_file":"bench_out.json","sf":$sf}"""
-    try spark.stop() catch { case _: Throwable => }
     println(compact)
     System.out.flush()
   }
@@ -238,16 +242,10 @@ object Bench {
     * from THIS class's code source + the Spark jars dir — correct under
     * sbt runMain (layered classloaders hide the project from
     * java.class.path) and under a plain `java -cp` alike. */
-  private def runIsolated(sfDir: String): Unit = {
+  private def runIsolated(sfDir: String, loadStart: Double): Unit = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    val loadStart = loadavg()
-    val loadMax = sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
-      .flatMap(_.toDoubleOption).getOrElse(3.0)
-    val only: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = selected.map(_._1)
     val javaBin = sys.props("java.home") + "/bin/java"
     val codeSrc = SparkEntry.getClass.getProtectionDomain
       .getCodeSource.getLocation.toURI.getPath
@@ -274,7 +272,6 @@ object Bench {
     var load = -1.0
     var passes = 0
     var fixtureBuilds = 0L
-    val contended = loadStart > loadMax
     // child heap: default 8g matches the r12+ protocol; sf10-class runs
     // need executor-standard memory per core (2GB/thread — the 100 TB
     // sizing a real cluster gives each executor), set via env
@@ -282,23 +279,14 @@ object Bench {
     names.zipWithIndex.foreach { case (name, i) =>
       val cmd = (Seq(javaBin) ++ addOpens ++ Seq(s"-Xmx$childXmx",
         "-Dspark.ui.enabled=false", "-cp", cp, "graft.Bench")).toArray
+      // the child starts from a copy of this process's environment
+      // (CPUS, PASSES, FIXTURE_DIR, LOADAVG_MAX carry over as they are)
       val pb = new ProcessBuilder(cmd: _*)
       pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
       pb.environment().put("SPARK_GRAFT_BENCH_ONLY", name)
       pb.environment().remove("SPARK_GRAFT_ISOLATE")
-      sys.env.get("SPARK_GRAFT_CPUS")
-        .foreach(pb.environment().put("SPARK_GRAFT_CPUS", _))
-      sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-        .foreach(pb.environment().put("SPARK_GRAFT_BENCH_PASSES", _))
-      sys.env.get("SPARK_GRAFT_FIXTURE_DIR")
-        .foreach(pb.environment().put("SPARK_GRAFT_FIXTURE_DIR", _))
-      sys.env.get("SPARK_GRAFT_LOADAVG_MAX")
-        .foreach(pb.environment().put("SPARK_GRAFT_LOADAVG_MAX", _))
-      pb.redirectErrorStream(false)
-      if (sys.env.get("SPARK_GRAFT_ISOLATE_DEBUG").contains("1")) {
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        System.err.println(s"[isolate-debug] ${cmd.mkString(" ")}")
-      } else pb.redirectError(ProcessBuilder.Redirect.DISCARD)
+      // stdout carries the child's JSON lines; its stderr is the run log
+      pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       // each child writes its own bench_out.json — sandbox it per child
       // so the merged parent artifact is the only bench_out.json left
       val childDir = java.nio.file.Files
@@ -309,7 +297,7 @@ object Bench {
         proc.getInputStream, "UTF-8").getLines().toList
       val rc = proc.waitFor()
       val parsed = out.headOption.flatMap { line =>
-        try Some(JsonMethods.parse(line)) catch { case _: Throwable => None }
+        try Some(JsonMethods.parse(line)) catch { case NonFatal(_) => None }
       }
       parsed match {
         case Some(j) =>
@@ -348,38 +336,7 @@ object Bench {
       System.err.println(s"[isolate ${i + 1}/${names.size}] $name " +
         timings.get(name).map(v => f"$v%.2fs").getOrElse("FAILED"))
     }
-    def num(v: Double): String = "%.4f".formatLocal(Locale.US, v)
-    val qs = timings.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val total = timings.values.sum
-    val sf = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
-      .map(_.group(1).stripSuffix(".")).getOrElse("0")
-    val line =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,""" +
-      s""""errors":$errJson,"passes":$passes,"isolated":true,""" +
-      s""""loadavg":${num(load)},"loadavg_start":${num(loadStart)},""" +
-      s""""contended":$contended,""" +
-      s""""fixture_builds":$fixtureBuilds,"sf":$sf}"""
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_out.json"), line + "\n")
-    catch { case _: Throwable => }
-    println(line)
-    val top = timings.toSeq.sortBy(-_._2).take(30)
-    val topQs = top.map { case (k, v) => "\"" + k + "\":" + num(v) }
-      .mkString("{", ",", "}")
-    val compactErr = if (errJson.length <= 400) errJson
-      else "{\"error_count\":" + errors.size + "}"
-    val compact =
-      s"""{"metric":"total","value":${num(total)},"unit":"sec",""" +
-      s""""queries":$topQs,"queries_omitted":${timings.size - top.size},""" +
-      s""""errors":$compactErr,"passes":$passes,"isolated":true,""" +
-      s""""loadavg":${num(load)},"loadavg_start":${num(loadStart)},""" +
-      s""""contended":$contended,"fixture_builds":$fixtureBuilds,""" +
-      s""""queries_file":"bench_out.json","sf":$sf}"""
-    println(compact)
-    System.out.flush()
+    emit(sfDir, timings.toSeq.sortBy(_._1), errors, passes,
+      isolated = true, load, loadStart, loadStart > loadMax, fixtureBuilds)
   }
 }

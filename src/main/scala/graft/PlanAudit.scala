@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
@@ -291,19 +290,12 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "86400s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // WARN so WindowExec's own single-partition warning interleaves
-    // with the per-entry markers below: eager executions inside an
-    // entry's builder (checkpoint loops, fixture writes) never appear
-    // in the FINAL plan, but their warnings land between markers.
-    spark.sparkContext.setLogLevel("WARN")
+    // the session logs at WARN, so WindowExec's own single-partition
+    // warning interleaves with the per-entry markers below: eager
+    // executions inside an entry's builder (checkpoint loops, fixture
+    // writes) never appear in the FINAL plan, but their warnings land
+    // between markers.
+    val spark = LocalSession()
 
     // walk INTO adaptive plans and reused/staged subtrees, then collect
     def windows(p: SparkPlan): Seq[(String, SparkPlan)] = {

@@ -16,26 +16,15 @@ import java.nio.file.{Files, Paths}
   *    (leaked temp view, stale cache) can't deterministically re-fail.
   *  - per-entry wall time + exception class goes to stderr, so the next
   *    round can diagnose driver-side drops from the run log.
-  *  - state-store maintenance is slowed to 86400s: these bounded
-  *    AvailableNow runs never need background snapshots, and the
-  *    maintenance thread racing session shutdown is exactly the RpcEnv
-  *    exception spew that broke BENCH_r09's tail parse. */
+  *  - the session is [[LocalSession]]'s, whose state-store maintenance
+  *    setting keeps shutdown quiet. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional dev-only 3rd arg: comma-separated query-name subset
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "86400s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
 
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

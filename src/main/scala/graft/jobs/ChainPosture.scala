@@ -71,15 +71,7 @@ object ChainPosture {
     val nGens = args.lift(1).map(_.toInt).getOrElse(50)
     val deltaSize = args.lift(2).map(_.toInt).getOrElse(50)
     val compactEvery = args.lift(3).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     val (timings, corpus, stateRoot) =
       drive(spark, sfDir, nGens, deltaSize, compactEvery)
     timings.foreach { t =>

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -47,6 +48,13 @@ class JobRunner(
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
+  /** One problems.log line `<what> FAILED: <message>`: the message's
+    * newlines collapse (Spark analysis errors carry multi-line plans),
+    * so every failure is exactly one line. */
+  private def logFailure(what: String, e: Throwable): Unit =
+    log(s"$problemsDir/problems.log", s"$what FAILED: " +
+      String.valueOf(e.getMessage).replaceAll("\\s*\n\\s*", " "))
+
   /** One sweep over the queue (`datapump.py:694-707`): every non-hidden
     * `*-job.json` in inputDir. Returns per-job outcomes. */
   def runAll(): Seq[(String, Either[String, Outcome])] = {
@@ -59,13 +67,6 @@ class JobRunner(
       .toSeq.sortBy(_.toString)
     jobFiles.map { jf =>
       jf.toString -> runJobFile(jf)
-    }
-  }
-
-  private implicit class IterAsScala[T](it: java.util.Iterator[T]) {
-    def asScala: Iterator[T] = new Iterator[T] {
-      def hasNext: Boolean = it.hasNext
-      def next(): T = it.next()
     }
   }
 
@@ -94,7 +95,7 @@ class JobRunner(
       case Right(job: Job) => Try(runJob(job)) match {
         case Success(r) => Right(r)
         case Failure(e) =>
-          log(s"$problemsDir/problems.log", s"$jobFile FAILED: ${e.getMessage}")
+          logFailure(jobFile.toString, e)
           Left(e.getMessage)
       }
       // corpus kinds are ONE-SHOT: the job file itself is the queue item
@@ -142,8 +143,7 @@ class JobRunner(
             Right(StreamOutcome(reps.map(_.generation),
               reps.map(_.nKept).sum, reps.map(_.totalTokens).sum))
           case Failure(e) =>
-            log(s"$problemsDir/problems.log",
-              s"$jobFile CORPUSSTREAM FAILED: ${e.getMessage}")
+            logFailure(s"$jobFile CORPUSSTREAM", e)
             Left(e.getMessage)
         }
     }
@@ -161,8 +161,7 @@ class JobRunner(
         Right(out)
       case Failure(e) =>
         archive(jobFile.toString, problemsDir)
-        log(s"$problemsDir/problems.log",
-          s"$jobFile $tag FAILED: ${e.getMessage}")
+        logFailure(s"$jobFile $tag", e)
         Left(e.getMessage)
     }
   }
@@ -183,7 +182,7 @@ class JobRunner(
           FileResult(f, rows, dupes, dt)
         case Failure(e) =>
           archive(f, problemsDir)
-          log(s"$problemsDir/problems.log", s"$f FAILED: ${e.getMessage}")
+          logFailure(f, e)
           FileResult(f, -1, -1, 0)
       }
     }
@@ -220,13 +219,8 @@ class JobRunner(
     }
     threads.foreach(_.start())
     joinAll(threads)
-    // one line per failed stat (analysis errors carry multi-line plans)
-    for (i <- failures.indices if failures(i) != null) {
-      val msg = String.valueOf(failures(i).getMessage)
-      log(s"$problemsDir/problems.log",
-        s"${targets(i)} STAT ${job.stats(i).kind} FAILED: " +
-          msg.replaceAll("\\s*\n\\s*", " "))
-    }
+    for (i <- failures.indices if failures(i) != null)
+      logFailure(s"${targets(i)} STAT ${job.stats(i).kind}", failures(i))
     failures.find(_ != null).foreach(e => throw e)
   }
 

@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
   *    window at all), within-bucket prefix via a PARTITIONED window.
   *    Every value's prefix is an exact integer/decimal sum (order-
   *    independent), bit-equal to the single-window formulation.
+  *  - [[doubledMidrank]]: the exact-integer doubled average rank of
+  *    each value of a tied domain, on top of [[belowBucketed]].
   *  - [[thetaRank]]: rank under a composite total order on a TINY
   *    (top-k / replica-count) relation via the same theta-join count —
   *    O(n²) pairs, fine for n ≤ a few hundred, and embarrassingly
@@ -91,6 +93,18 @@ object Prefix {
       (col(s"__off_$n") + col(s"__loc_$n")).as(n) }
     withLoc.join(broadcast(offsets), "__pb").select(finalCols: _*)
   }
+
+  /** Adds `r2 = 2·below + cnt + 1`, TWICE the midrank (average 1-based
+    * rank of a tie group) of each `key` value, where `cnt` is the
+    * value's multiplicity and `below` counts the rows strictly below it
+    * (the tie group spans ranks below+1 … below+cnt). Doubling keeps the
+    * .5-grained midrank an exact integer. `dom` holds one row per
+    * distinct `key`; its columns are kept. */
+  def doubledMidrank(dom: DataFrame, key: String, cnt: String): DataFrame =
+    belowBucketed(dom, key, sums = Seq((col(cnt), "__below")),
+        inclusive = false)
+      .select(dom.columns.map(col) :+
+        (col("__below") * 2 + col(cnt) + 1).as("r2"): _*)
 
   /** Rank (1-based, distinct order keys assumed) under a composite
     * total order, via theta-join counting of strictly-preceding rows.

@@ -169,10 +169,12 @@ object Stats {
         // relation — the quantile stats/targets subtrees then cost
         // zero extra passes (guide §2.4; r18: runtime corpus scans
         // 3 → 2, the 583k-row targets re-aggregation disappears).
-        // Non-eager: the one-row frame materializes with the query it
-        // feeds instead of as a separate pre-main barrier job
-        // (measured equal-or-better at sf0.1; the frame is one row, so
-        // either mode is storage-trivial)
+        // Non-eager (measured equal-or-better than eager at sf0.1), yet
+        // under AQE the checkpoint still runs the moment pass as its OWN
+        // SQL execution while this frame is built — traced queue_sweep
+        // attributes jobs to `localCheckpoint at Stats.scala` — not
+        // inside the query it feeds; the frame is one row, so either
+        // mode is storage-trivial
         val one = oneBase.localCheckpoint(false)
         val statsDf = one.selectExpr(s"stack(${cols.size}, " +
           cols.map(c => s"'$c', `${c}__min`, `${c}__max`, " +
@@ -265,8 +267,9 @@ object Stats {
     val one =
       if (exact && numCols.nonEmpty) {
         // same bounds handoff as describe(): the one-row moment pass
-        // already carries min/max/count per numeric column (non-eager
-        // for the same stage-concurrency reason)
+        // already carries min/max/count per numeric column (non-eager,
+        // yet executed as its own SQL execution while the frame is
+        // built, as in describe())
         val oneCk = one0.localCheckpoint(false)
         val statsDf = oneCk.selectExpr(s"stack(${numCols.size}, " +
           numCols.map(c => s"'$c', `${c}__min`, `${c}__max`, " +

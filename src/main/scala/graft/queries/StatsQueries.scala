@@ -132,13 +132,12 @@ object StatsQueries extends QueryPack {
           count(lit(1)).as("cnt"),
           sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
             .as("cnt_a"))
-      val a = graft.ops.Prefix.belowBucketed(vals.localCheckpoint(), "c",
-          sums = Seq((col("cnt"), "below")), inclusive = false)
+      val a = graft.ops.Prefix.doubledMidrank(vals.localCheckpoint(), "c",
+          "cnt")
         .agg(
           sum(col("cnt_a")).cast(dec).as("n_a"),
           sum(col("cnt")).cast(dec).as("n"),
-          sum((col("cnt_a") * (col("below") * 2 + col("cnt") + 1))
-            .cast(dec)).as("r2a"),
+          sum((col("cnt_a") * col("r2")).cast(dec)).as("r2a"),
           sum((col("cnt") * col("cnt") * col("cnt") - col("cnt"))
             .cast(dec)).as("ties"))
         .select(col("n_a"), (col("n") - col("n_a")).as("n_b"),
@@ -190,14 +189,13 @@ object StatsQueries extends QueryPack {
         .groupBy(abs(col("dd")).as("ad")).agg(
           count(lit(1)).as("cnt"),
           sum(when(col("dd") > 0, 1L).otherwise(0L)).as("cnt_pos"))
-      val a = graft.ops.Prefix.belowBucketed(buckets.localCheckpoint(),
-          "ad", sums = Seq((col("cnt"), "below")), inclusive = false)
+      val a = graft.ops.Prefix.doubledMidrank(buckets.localCheckpoint(),
+          "ad", "cnt")
         .agg(
           sum(col("cnt")).cast(dec).as("n"),
           // cast BEFORE multiplying (the agg_bh_fdr discipline): a
           // ~2.1M-row tie bucket overflows cnt³ in long silently
-          sum(col("cnt_pos").cast(dec) *
-            (col("below") * 2 + col("cnt") + 1).cast(dec)).as("w2"),
+          sum(col("cnt_pos").cast(dec) * col("r2").cast(dec)).as("w2"),
           sum(col("cnt").cast(dec) * col("cnt").cast(dec) *
             col("cnt").cast(dec) - col("cnt").cast(dec)).as("ties"))
       a.select(
@@ -809,10 +807,8 @@ object StatsQueries extends QueryPack {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       def marg(k: String) = {
         val dom = joint.groupBy(k).agg(sum("cnt").as("m"))
-        graft.ops.Prefix.belowBucketed(dom, k,
-            sums = Seq((col("m"), "below")), inclusive = false)
-          .select(col(k), col("m"),
-            (col("below") * 2 + col("m") + 1).as(s"r2$k"))
+        graft.ops.Prefix.doubledMidrank(dom, k, "m")
+          .select(col(k), col("m"), col("r2").as(s"r2$k"))
       }
       val ma = marg("a")
       val mb = marg("b")
@@ -1039,9 +1035,8 @@ object StatsQueries extends QueryPack {
         .groupBy("c", "event_type").agg(count(lit(1)).as("cnt"))
         .localCheckpoint()
       val gdom = dom.groupBy("c").agg(sum("cnt").as("m")).localCheckpoint()
-      val r2 = graft.ops.Prefix.belowBucketed(gdom, "c",
-          sums = Seq((col("m"), "below")), inclusive = false)
-        .select(col("c"), (col("below") * 2 + col("m") + 1).as("r2"))
+      val r2 = graft.ops.Prefix.doubledMidrank(gdom, "c", "m")
+        .select(col("c"), col("r2"))
       val tot = gdom.agg(sum(col("m").cast(dec)).as("n"),
         sum(col("m").cast(dec) * col("m") * col("m") - col("m").cast(dec))
           .as("ties"))

@@ -111,14 +111,6 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     if (isDerby) s"""DELETE FROM "$table""""
     else s"""TRUNCATE TABLE "$table""""
 
-  /** Distributed batched PK upsert. Incoming batches must be PK-deduped
-    * (the engine always dedupes before the sink, like the reference —
-    * `datapump.py:446` runs dedupe before `datastore_upsert`).
-    *
-    * Postgres: one `INSERT ... ON CONFLICT DO UPDATE` statement. Derby
-    * (test dialect) rejects MERGE from a VALUES source, so it runs batched
-    * DELETE-then-INSERT inside one transaction — same last-write-wins
-    * semantics. */
   /** Dialect upsert statements: Postgres = one `INSERT … ON CONFLICT DO
     * UPDATE` (second element null); Derby (test dialect, rejects MERGE
     * from a VALUES source) = (DELETE-by-PK, INSERT) executed as batched
@@ -145,6 +137,14 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     }
   }
 
+  /** Distributed batched PK upsert. Incoming batches must be PK-deduped
+    * (the engine always dedupes before the sink, like the reference —
+    * `datapump.py:446` runs dedupe before `datastore_upsert`).
+    *
+    * Postgres: one `INSERT ... ON CONFLICT DO UPDATE` statement. Derby
+    * (test dialect) rejects MERGE from a VALUES source, so it runs batched
+    * DELETE-then-INSERT inside one transaction — same last-write-wins
+    * semantics. */
   def upsert(df: DataFrame, table: String, pk: Seq[String],
       batchSize: Int = 500): Unit = {
     val schema = df.schema

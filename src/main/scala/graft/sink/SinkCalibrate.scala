@@ -1,7 +1,6 @@
 package graft.sink
 
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 
 /** The PLANS §28 sink-calibration workload as a RUNNABLE main — r15
   * measured the embedded-Derby floor vs a real PostgreSQL 15 by hand
@@ -12,8 +11,10 @@ import org.apache.spark.sql.SparkSession
   * v DOUBLE); phase 1 upserts N fresh rows; phase 2 upserts N/2
   * conflicting (the ON CONFLICT DO UPDATE arm) + N/2 new rows. Timing
   * is wall-clock per phase over [[JdbcSink.upsert]]'s real
-  * foreachPartition/batch-500 path at local[8] — the exact shape every
-  * committed sink number rests on.
+  * foreachPartition/batch-500 path over 8 partitions, on
+  * [[graft.LocalSession]]'s cores (`tools/pg_calibrate.sh` sets
+  * `SPARK_GRAFT_CPUS=8`: local[8], the exact shape every committed sink
+  * number rests on).
   *
   * Modes:
   *  - `print-sql` — emit the EXACT generated statements (CREATE /
@@ -62,12 +63,7 @@ object SinkCalibrate {
   }
 
   private def run(sink: JdbcSink, engine: String, n: Int): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     import spark.implicits._
     def rows(from: Long, until: Long, tag: String) =
       spark.range(from, until, 1, 8)

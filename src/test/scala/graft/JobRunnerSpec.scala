@@ -158,6 +158,9 @@ class JobRunnerSpec extends SparkSpec {
     // the job's own FAILED line follows every stat line
     assert(problems.indexWhere(_.contains("sensors-job.json FAILED")) >
       statLines.max, problems)
+    // one line per failure: the job line's multi-line analysis message
+    // is collapsed like the stat lines'
+    assert(problems.size == 3 && problems.forall(_.nonEmpty), problems)
     assert(sink.recordCount(s"${table}__descriptive") == 11)
   }
 

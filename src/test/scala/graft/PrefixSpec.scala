@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.ops.Prefix
@@ -82,5 +83,28 @@ class PrefixSpec extends SparkSpec {
     val got = Prefix.thetaRank(df, Seq(("c", true), ("key", false)), "r")
       .collect().map(r => (r.getLong(1), r.getLong(2))).toMap
     assert(got == want)
+  }
+
+  test("doubledMidrank equals twice the rank() midrank over expanded rows") {
+    // ties everywhere: v = ⌊√i⌋ over 300 rows is 17 values of
+    // multiplicity 3, 5, 7, …, 33 and a final 12
+    val expanded = (1 to 300).map(i => (math.sqrt(i.toDouble).toLong, i))
+      .toDF("v", "i")
+    // a tie group spans ranks [first, last]: first = rank() ascending,
+    // last = n + 1 − rank() descending; midrank = (first + last) / 2.
+    // One constant partition keeps WindowExec's single-partition WARN
+    // out of the suite log.
+    val n = expanded.count()
+    val all = Window.partitionBy(lit(0))
+    val want = expanded
+      .withColumn("first", rank().over(all.orderBy(col("v"))))
+      .withColumn("last", lit(n + 1) - rank().over(all.orderBy(col("v").desc)))
+      .groupBy("v").agg(max(col("first") + col("last")).as("twice"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    assert(want.size == 17)
+    val dom = expanded.groupBy("v").agg(count(lit(1)).as("cnt"))
+    val got = Prefix.doubledMidrank(dom, "v", "cnt")
+    assert(got.columns.toSeq == Seq("v", "cnt", "r2"))
+    assert(got.collect().map(r => (r.getLong(0), r.getLong(2))).toMap == want)
   }
 }

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one JVM-wide session (getOrCreate),
-  * UTC, small shuffle partitions, nanos handling on. */
+/** Shared local session for specs: one JVM-wide [[LocalSession]]. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sqlImplicits: org.apache.spark.sql.SQLImplicits = spark.implicits
@@ -22,16 +21,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** Pinned at 4 cores whatever `SPARK_GRAFT_CPUS` says: partition-count
+    * and plan-shape assertions are written against 4. */
+  lazy val session: SparkSession = LocalSession(4)
 }

@@ -59,7 +59,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   ADD_OPENS="$ADD_OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
 run_calib() { # run_calib <mode-args...>
-  java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
+  SPARK_GRAFT_CPUS=8 java $ADD_OPENS -Xmx8g -Dspark.ui.enabled=false \
     -cp "/opt/spark/jars/*:$JAR${SPARK_GRAFT_PG_JDBC_JAR:+:$SPARK_GRAFT_PG_JDBC_JAR}" \
     graft.sink.SinkCalibrate "$@"
 }
