@@ -79,11 +79,14 @@ object Main {
     val conf = resolveConfig(args.toSeq, sys.env,
       configFile.map(loadProps).getOrElse(Map.empty))
 
+    LocalSession.quietLogging()
     val spark = SparkSession.builder()
       .appName("graft")
       .master(conf("master"))
       .config("spark.sql.shuffle.partitions", conf("shufflepartitions"))
       .config("spark.sql.session.timeZone", "UTC")
+      // the queue is resident: sweeps reuse their generated classes
+      .config(LocalSession.residentCodegen)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -127,7 +127,11 @@ object CorpusStreamJob {
   def ingestBatch(spark: SparkSession, batch: DataFrame,
       corpusDir: String, stateRoot: String,
       knobs: CorpusKnobs = CorpusKnobs()): Option[DeltaReport] = {
-    if (batch.isEmpty) return None
+    // one pass fingerprints the batch for replay recognition and for
+    // the snapshot ingestDelta records; a count of 0 is an empty batch
+    val fp @ (bMin, bMax, bCnt, bHash) =
+      IncrementalCorpusJob.envelopeFingerprint(batch)
+    if (bCnt == 0L) return None
     val chain = chainDirs(spark, stateRoot)
     require(chain.nonEmpty,
       s"no state chain under $stateRoot — bootstrap the corpus " +
@@ -138,8 +142,6 @@ object CorpusStreamJob {
         s"chain under $stateRoot is missing meta.json — stream-managed " +
           "chains always carry it; was a foreign snapshot dir mixed in?"))
     val nextGen = metas.map(_.gen).max + 1
-    val (bMin, bMax, bCnt, bHash) =
-      IncrementalCorpusJob.envelopeFingerprint(batch)
     val landed = metas.filter(_.nKeys > 0)
     val landedMax = if (landed.isEmpty) -1L else landed.map(_.maxDocId).max
     // file-source recovery reconstructs an uncommitted batch EXACTLY
@@ -183,7 +185,7 @@ object CorpusStreamJob {
       corpusDir, chain, s"$stateRoot/snap=$nextGen",
       knobs.minTokens, knobs.maxTokens, knobs.minQuality,
       knobs.dedupeThreshold, knobs.budgetTokens, knobs.seed,
-      knobs.numShards))
+      knobs.numShards, fingerprint = Some(fp)))
   }
 
   /** Repair any crash window before draining: recover the chain head

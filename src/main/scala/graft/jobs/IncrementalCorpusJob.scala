@@ -1,8 +1,9 @@
 package graft.jobs
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 import graft.ops.{CorpusOps, IncrementalDedupe, TextOps}
@@ -50,14 +51,22 @@ import graft.ops.{CorpusOps, IncrementalDedupe, TextOps}
   * validates chain/landed consistency up front so an unrepaired crash
   * fails loudly instead of silently re-admitting near-dups.
   *
-  * Per-delta cost: curate is map-only over the delta; the exact tier
-  * bloom-gates against the landed key table (filter sized from chain
-  * metadata — no counting pass; only probe-positives reach the exact
-  * semi-join); the near-dup tier probes the band index and fetches
-  * landed TEXT only for band-candidates through the pruned generation
-  * reads; packing and the shard write touch only kept delta docs.
-  * Nothing is proportional to the landed corpus except the
-  * state-key/band unions, which are ~256 bytes per landed canonical.
+  * Per-delta cost: every relation of a generation executes once.
+  * Curate and the exact-content key share one checkpoint over the
+  * delta; the exact tier bloom-gates against the landed key parquet,
+  * read in place (filter sized from chain metadata — no counting pass;
+  * only probe-positives reach the exact semi-join); the near-dup tier
+  * materializes ONE candidate relation (delta bands against the
+  * delta's own bands and the landed band index) that the within-delta
+  * verify, the text fetch and the base verify all read, and fetches
+  * landed TEXT only for band-candidates, in one pruned scan of the
+  * touched generations; packing and the shard write touch only kept
+  * delta docs. The [[DeltaReport]] counts come from passes that run
+  * anyway: the batch fingerprint, one count of the curated
+  * checkpoint, one aggregate over the verdicts and the staged
+  * read-back. Nothing is proportional to the landed corpus except the
+  * bloom build's scan of the key table and the band probe's scan of
+  * the band index, ~256 bytes per landed canonical.
   *
   * Ordering contract (asserted): delta doc ids must be strictly greater
   * than every landed id, so "landed canonicals win" coincides with the
@@ -71,10 +80,10 @@ import graft.ops.{CorpusOps, IncrementalDedupe, TextOps}
   */
 object IncrementalCorpusJob {
 
-  /** Audit of one delta ingestion, counts read back from the LANDED
-    * generation where possible (a write-path bug cannot hide). The
-    * funnel: nDelta ≥ nCurated ≥ nExactFresh = nKept + nDupBase +
-    * nDupDelta. */
+  /** Audit of one delta ingestion. `nSequences` and `totalTokens` are
+    * read back from the STAGED generation bytes, which the commit
+    * rename lands unchanged (a write-path bug cannot hide). The funnel:
+    * nDelta ≥ nCurated ≥ nExactFresh = nKept + nDupBase + nDupDelta. */
   case class DeltaReport(
       generation: Int,
       nDelta: Long, nCurated: Long, nExactFresh: Long,
@@ -136,66 +145,74 @@ object IncrementalCorpusJob {
     * exact-vs-state → near-dup-vs-state (transitive through the batch)
     * → pack → staged shard write → state snapshot → commit rename.
     * `stateInDirs` is the chain of ALL prior snapshots (bootstrap's
-    * plus one per prior delta, or a [[compactState]] merge). */
+    * plus one per prior delta, or a [[compactState]] merge).
+    * `fingerprint` is the batch's [[envelopeFingerprint]] when the
+    * caller already computed it ([[CorpusStreamJob.ingestBatch]] does,
+    * for replay recognition); without it the delta is fingerprinted
+    * here. */
   def ingestDelta(spark: SparkSession, deltaDocs: DataFrame,
       generation: Int, corpusDir: String,
       stateInDirs: Seq[String], stateOutDir: String,
       minTokens: Int = 20, maxTokens: Int = 90,
       minQuality: Double = 0.58, dedupeThreshold: Double = 0.5,
       budgetTokens: Int = 2048, seed: Long = 7L,
-      numShards: Int = 8): DeltaReport = {
+      numShards: Int = 8,
+      fingerprint: Option[(Long, Long, Long, Long)] = None): DeltaReport = {
     require(generation > 0, "generation 0 is bootstrap's")
     val delta = deltaDocs.select("doc_id", "lang", "text")
       .localCheckpoint()
     val chainMeta = readChainMeta(spark, stateInDirs)
     chainMeta.foreach(validateChain(spark, corpusDir, _, generation))
-    val stateKeys = spark.read
-      .parquet(stateInDirs.map(_ + "/keys"): _*).localCheckpoint()
+    val stateKeys = spark.read.parquet(stateInDirs.map(_ + "/keys"): _*)
     val stateBands = IncrementalDedupe.explodeBands(
       spark.read.parquet(stateInDirs.map(_ + "/bands"): _*), "doc_id")
 
     // ordering contract: landed ids all precede delta ids (keep-first
     // parity with a full rebuild). With chain metadata this is a
     // driver-side comparison; without it (a pre-metadata chain) it
-    // falls back to one agg over the checkpointed key table.
+    // falls back to one agg over the key table.
     val maxLanded = chainMeta
       .map(_.filter(_.nKeys > 0).map(_.maxDocId).max)
       .getOrElse(stateKeys.agg(max("doc_id")).head.getLong(0))
-    val (minDelta, maxDelta, fpCount, fpHash) = envelopeFingerprint(delta)
+    val (minDelta, maxDelta, nDelta, fpHash) =
+      fingerprint.getOrElse(envelopeFingerprint(delta))
+    require(nDelta > 0, s"delta for generation $generation is empty")
     require(minDelta > maxLanded,
       s"delta ids must follow landed ids (landed max $maxLanded, " +
         s"delta min $minDelta) — keep-first parity needs id-ordered " +
         "arrival")
 
-    // stage 1: curate (quality gates + WITHIN-delta exact keep-first)
-    val curKeep = TextOps.curate(delta, "doc_id", "text",
-        minTokens, maxTokens, minQuality)
-      .filter(col("keep")).select("doc_id")
-    val curated = delta.join(curKeep, "doc_id").localCheckpoint()
+    // stage 1: curate (quality gates + WITHIN-delta exact keep-first),
+    // carrying the exact-content key the next stage probes with: the
+    // key is an injective function of curate's duplicate-window key,
+    // so the window partitions on it directly
+    val curated = delta
+      .withColumn("__k", IncrementalDedupe.exactKey(col("text")))
+      .withColumn("__reason", TextOps.curateReason("doc_id", "text",
+        minTokens, maxTokens, minQuality, col("__k")))
+      .filter(col("__reason").isNull).drop("__reason")
+      .localCheckpoint()
 
     // stage 2: exact tier vs landed — BLOOM-GATED (the
     // dedupe_incremental_bloom tier wired into the job): the landed
     // key table folds into a ~9-bits/key filter (one pass over the
-    // checkpointed state, a mergeable aggregate — the state is never
+    // key parquet, a mergeable aggregate — the state is never
     // shuffled), bloom-negatives are DEFINITIVELY fresh (no false
     // negatives), and only probe-positives reach the exact semi-join,
     // so the join input is |dupes| + 1%·|fresh| instead of |delta|.
     // Sizing comes from chain metadata — the state chain is NOT
     // re-counted per delta (that second pass was r13's cost bug).
     // Result identical to a plain anti-join by construction.
-    val keyed = curated
-      .withColumn("__k", IncrementalDedupe.exactKey(col("text")))
-      .localCheckpoint()
     val nLandedKeys = chainMeta.map(_.map(_.nKeys).sum)
       .getOrElse(stateKeys.count())
     val bf = stateKeys.stat.bloomFilter("k",
       math.max(nLandedKeys, 1000L), 0.01)
     val bfBc = spark.sparkContext.broadcast(bf)
     val might = udf((k: Long) => bfBc.value.mightContainLong(k))
-    val dupIds = keyed.filter(might(col("__k")))
+    val dupIds = curated.filter(might(col("__k")))
       .join(stateKeys.select(col("k").as("__k")), Seq("__k"), "left_semi")
       .select("doc_id")
-    val fresh = keyed.join(dupIds, Seq("doc_id"), "left_anti")
+    val fresh = curated.join(dupIds, Seq("doc_id"), "left_anti")
       .drop("__k").localCheckpoint()
 
     // stage 3: near-dup tier vs landed band index; landed TEXT is read
@@ -212,121 +229,134 @@ object IncrementalCorpusJob {
     }
     val verdicts = IncrementalDedupe.neardupVerdicts(fresh, "doc_id",
       "text", stateBands, fetch, dedupeThreshold).localCheckpoint()
-    val kept = fresh.join(
-      verdicts.filter(col("status") === "kept").select("doc_id"),
-      "doc_id").localCheckpoint()
+    // the funnel below the exact tier in one pass: verdicts hold one
+    // row per exact-fresh doc
+    val funnel = verdicts.agg(count(lit(1)),
+      count(when(col("status") === "kept", true)),
+      count(when(col("status") === "dup_base", true)),
+      count(when(col("status") === "dup_delta", true))).head
+    val nKept = funnel.getLong(1)
 
     // stage 4: pack THIS generation's stream and STAGE its shards
     // (invisible to readers until the commit rename below). An
     // all-dropped delta lands NO generation dir — but it still gets a
     // schema-ful empty state snapshot so the chain union stays
     // readable.
-    val keptN = kept.count()
     val genDir = s"$corpusDir/gen=$generation"
-    if (keptN > 0) {
-      val staging = stagingDir(corpusDir, generation)
-      val packed = CorpusOps.packSequences(kept, "doc_id", "lang",
-        "text", budgetTokens)
-      CorpusOps.writeIdClustered(
-        packed.join(kept.select("doc_id", "text"), "doc_id"),
-        "doc_id", seed + generation, numShards, staging)
-      // stage 5: state snapshot for this generation (additions only),
-      // built from the STAGED bytes (= the landed bytes after the
-      // rename) so a write-path bug cannot hide; then the commit
-      // rename makes the generation visible
-      writeStateCommitted(spark,
-        spark.read.parquet(staging).select("doc_id", "text"),
-        generation, stateOutDir, single = false,
-        envelope = Some((minDelta, maxDelta)),
-        fingerprint = Some((fpCount, fpHash)))
-      commitGeneration(spark, corpusDir, generation)
-    } else {
-      writeStateCommitted(spark, kept.select("doc_id", "text").limit(0),
-        generation, stateOutDir, single = true,
-        envelope = Some((minDelta, maxDelta)),
-        fingerprint = Some((fpCount, fpHash)))
-    }
-
-    // audit from the landed generation + the verdict relation
-    val statusCounts = verdicts.groupBy("status").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val (nseq, tok) =
-      if (keptN == 0) (0L, 0L)
-      else {
-        val a = spark.read.parquet(genDir).agg(
-          count_distinct(col("lang"), col("bin_id")).as("nseq"),
-          sum("n_tokens").as("tok")).head
-        (a.getLong(0), a.getLong(1))
+      if (nKept > 0) {
+        val kept = fresh.join(
+          verdicts.filter(col("status") === "kept").select("doc_id"),
+          "doc_id").localCheckpoint()
+        val staging = stagingDir(corpusDir, generation)
+        val packed = CorpusOps.packSequences(kept, "doc_id", "lang",
+          "text", budgetTokens)
+        CorpusOps.writeIdClustered(
+          packed.join(kept.select("doc_id", "text"), "doc_id"),
+          "doc_id", seed + generation, numShards, staging)
+        // stage 5: one read-back of the STAGED bytes (= the landed
+        // bytes after the rename), so a write-path bug cannot hide: it
+        // audits the packing and gives this generation's metadata; the
+        // state snapshot (additions only) is built from the same read,
+        // then the commit rename makes the generation visible
+        val staged = spark.read.parquet(staging)
+        val a = staged.agg(count(lit(1)), min("doc_id"), max("doc_id"),
+          count_distinct(col("lang"), col("bin_id")), sum("n_tokens")).head
+        writeStateCommitted(spark, staged.select("doc_id", "text"),
+          generation, stateOutDir, single = false,
+          envelope = Some((minDelta, maxDelta)),
+          fingerprint = Some((nDelta, fpHash)),
+          idStats = Some((a.getLong(0), a.getLong(1), a.getLong(2))))
+        commitGeneration(spark, corpusDir, generation)
+        (a.getLong(3), a.getLong(4))
+      } else {
+        writeStateCommitted(spark, fresh.select("doc_id", "text").limit(0),
+          generation, stateOutDir, single = true,
+          envelope = Some((minDelta, maxDelta)),
+          fingerprint = Some((nDelta, fpHash)),
+          idStats = Some((0L, 0L, -1L)))
+        (0L, 0L)
       }
+
     DeltaReport(
       generation = generation,
-      nDelta = delta.count(), nCurated = curated.count(),
-      nExactFresh = fresh.count(),
-      nKept = keptN,
-      nDupBase = statusCounts.getOrElse("dup_base", 0L),
-      nDupDelta = statusCounts.getOrElse("dup_delta", 0L),
+      nDelta = nDelta, nCurated = curated.count(),
+      nExactFresh = funnel.getLong(0),
+      nKept = nKept,
+      nDupBase = funnel.getLong(2),
+      nDupDelta = funnel.getLong(3),
       nSequences = nseq,
       totalTokens = tok,
       genDir = genDir, stateOutDir = stateOutDir)
   }
 
-  /** The O(candidates) landed-text fetch: candidates are mapped to the
-    * generations whose id ranges contain them (a broadcast join against
-    * the ≤|generations|-row metadata relation), and each touched
-    * generation is read with a PUSHED id predicate — a per-generation
-    * range always, plus the exact id-IN list when the candidate set is
-    * small enough to collect (the `pqCosineTopKFromLayout` rerank
+  /** The O(candidates) landed-text fetch: each touched generation is
+    * read with a PUSHED id predicate — the candidate id envelope within
+    * that generation, plus the exact id-IN list when the candidate set
+    * is small enough to collect (the `pqCosineTopKFromLayout` rerank
     * precedent). Because generation files are id-clustered, those
     * predicates prune at row-group level off parquet min/max footers;
-    * untouched generations are never opened at all. Driver-side data
-    * is O(|generations|) rows plus at most `maxInIds` collected ids —
-    * never O(corpus), never O(delta).
+    * untouched generations are never opened at all.
     *
-    * The trailing left-semi join restores row-exactness over whatever
-    * the pruned scan let through (row groups are coarse). */
+    * Small candidate sets (at most `maxInIds`, the common case) cost one
+    * bounded collect: the per-generation envelopes then come from the
+    * chain metadata on the driver, and every touched generation dir is
+    * read in ONE scan with the known (id, text) schema (no read per
+    * generation, no footer read to infer a schema), filtered by the OR
+    * of the envelopes and the id list. The id list makes that scan
+    * row-exact. Larger sets map candidates to
+    * generations through a broadcast join against the ≤|generations|-
+    * row metadata relation, read each touched generation with its
+    * envelope, and restore row-exactness with a trailing left-semi
+    * join (row groups are coarse). Driver-side data is O(|generations|)
+    * rows plus at most `maxInIds` + 1 collected ids — never O(corpus),
+    * never O(delta). */
   def prunedTextFetch(spark: SparkSession, corpusDir: String,
       idCol: String, textCol: String, metas: Seq[GenMeta],
-      maxInIds: Int = 4096): DataFrame => DataFrame = { candIdsIn =>
-    // the candidate relation feeds 2-3 actions below — materialize once
-    val candIds = candIdsIn.localCheckpoint()
+      maxInIds: Int = 4096): DataFrame => DataFrame = { candIds =>
+    val schema = StructType(Seq(candIds.schema(idCol),
+      StructField(textCol, StringType)))
     val ranges = metas.filter(_.nKeys > 0)
-    val empty = () => spark.read.parquet(corpusDir)
-      .select(col(idCol), col(textCol)).limit(0)
-    if (ranges.isEmpty) empty()
-    else {
+    val empty = () => spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], schema)
+    val ids = if (ranges.isEmpty) Array.empty[Long]
+      else candIds.select(col(idCol).cast("long")).limit(maxInIds + 1)
+        .collect().map(_.getLong(0))
+    if (ranges.isEmpty || ids.isEmpty) empty()
+    else if (ids.length <= maxInIds) {
+      // generations hold disjoint id ranges, so each id falls in at
+      // most one envelope
+      val perGen = ranges.flatMap { m =>
+        val in = ids.filter(i => i >= m.minDocId && i <= m.maxDocId)
+        if (in.isEmpty) None else Some((m.gen, in.min, in.max))
+      }
+      if (perGen.isEmpty) empty()
+      else spark.read.schema(schema)
+        .parquet(perGen.map { case (g, _, _) => s"$corpusDir/gen=$g" }: _*)
+        .filter(perGen.map { case (_, lo, hi) => col(idCol).between(lo, hi) }
+          .reduce(_ || _) && col(idCol).isin(ids.toIndexedSeq: _*))
+    } else {
+      // the candidate relation feeds 2 actions below — materialize once
+      val cands = candIds.localCheckpoint()
       val rangeDf = spark.createDataFrame(
         ranges.map(m => (m.gen, m.minDocId, m.maxDocId)))
         .toDF("__gen", "__lo", "__hi")
       // ≤ one row per generation: which gens hold candidates, and the
       // candidate id envelope within each
-      val perGen = candIds
+      val perGen = cands
         .join(broadcast(rangeDf),
           col(idCol).between(col("__lo"), col("__hi")))
         .groupBy("__gen")
-        .agg(min(idCol).as("__mn"), max(idCol).as("__mx"),
-          count(lit(1)).as("__n"))
+        .agg(min(idCol).as("__mn"), max(idCol).as("__mx"))
         .collect()
       if (perGen.isEmpty) empty()
-      else {
-        val totalCand = perGen.map(_.getAs[Long]("__n")).sum
-        // bounded collect: only when the whole candidate set fits the
-        // id-IN budget (point predicates prune sharper than the range
-        // envelope when candidates are sparse within a generation)
-        val idList: Option[Seq[Long]] =
-          if (totalCand <= maxInIds)
-            Some(candIds.collect().map(_.getLong(0)).toIndexedSeq)
-          else None
-        val parts = perGen.toSeq.map { r =>
-          val g = r.getAs[Int]("__gen")
-          val base = spark.read.parquet(s"$corpusDir/gen=$g")
-            .filter(col(idCol).between(
-              r.getAs[Long]("__mn"), r.getAs[Long]("__mx")))
-          idList.fold(base)(ids => base.filter(col(idCol).isin(ids: _*)))
-            .select(col(idCol), col(textCol))
+      else perGen.toSeq.map { r =>
+          spark.read.schema(schema)
+            .parquet(s"$corpusDir/gen=${r.getAs[Int]("__gen")}")
+            .filter(col(idCol).between(r.get(1), r.get(2)))
         }
-        parts.reduce(_ union _)
-          .join(candIds, Seq(idCol), "left_semi")
-      }
+        .reduce(_ union _)
+        .join(cands, Seq(idCol), "left_semi")
     }
   }
 
@@ -440,11 +470,14 @@ object IncrementalCorpusJob {
     * half-written snapshot is never visible under the final name.
     * `envelope` is the ingested batch's pre-curation id range
     * ([[GenMeta]]); None (bootstrap, state rebuilds) records the
-    * sentinel. */
+    * sentinel. `idStats` is `landed`'s (row count, min id, max id)
+    * when the caller already read it back; without it one agg over the
+    * snapshot's own keys computes it. */
   private def writeStateCommitted(spark: SparkSession, landed: DataFrame,
       generation: Int, stateDir: String, single: Boolean,
       envelope: Option[(Long, Long)] = None,
-      fingerprint: Option[(Long, Long)] = None): Unit = {
+      fingerprint: Option[(Long, Long)] = None,
+      idStats: Option[(Long, Long, Long)] = None): Unit = {
     val fs = new Path(stateDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = stateDir + ".tmp"
@@ -461,15 +494,17 @@ object IncrementalCorpusJob {
     w(bands, s"$tmp/bands")
     // this generation's metadata: one O(delta) agg over the snapshot's
     // own keys — never the chain
-    val a = spark.read.parquet(s"$tmp/keys")
-      .agg(count(lit(1)), min("doc_id"), max("doc_id")).head
+    val (n, lo, hi) = idStats.getOrElse {
+      val a = spark.read.parquet(s"$tmp/keys")
+        .agg(count(lit(1)), min("doc_id"), max("doc_id")).head
+      if (a.getLong(0) == 0L) (0L, 0L, -1L)
+      else (a.getLong(0), a.getLong(1), a.getLong(2))
+    }
     val (bMin, bMax) = envelope.getOrElse((0L, -1L))
     val (bCnt, bHash) = fingerprint.getOrElse((-1L, 0L))
     val gm =
-      if (a.getLong(0) == 0L)
-        GenMeta(generation, 0L, 0L, -1L, bMin, bMax, bCnt, bHash)
-      else GenMeta(generation, a.getLong(0), a.getLong(1), a.getLong(2),
-        bMin, bMax, bCnt, bHash)
+      if (n == 0L) GenMeta(generation, 0L, 0L, -1L, bMin, bMax, bCnt, bHash)
+      else GenMeta(generation, n, lo, hi, bMin, bMax, bCnt, bHash)
     writeMeta(spark, tmp, Seq(gm))
     fs.delete(new Path(stateDir), true)
     require(fs.rename(new Path(tmp), new Path(stateDir)),
@@ -481,9 +516,11 @@ object IncrementalCorpusJob {
     * per-row xxhash64(doc_id, lang, text))`. Shared by [[ingestDelta]]
     * (which records it) and [[graft.jobs.CorpusStreamJob.ingestBatch]]
     * (which compares it for replay recognition) so both sides compute
-    * the identical value. Caller guarantees a non-empty batch. */
+    * the identical value. An empty batch reads `(0, -1, 0, 0)`: count
+    * 0 under the unrecorded-envelope sentinel. */
   def envelopeFingerprint(batch: DataFrame): (Long, Long, Long, Long) = {
-    val r = batch.agg(min("doc_id"), max("doc_id"), count(lit(1)),
+    val r = batch.agg(coalesce(min("doc_id"), lit(0L)),
+      coalesce(max("doc_id"), lit(-1L)), count(lit(1)),
       expr("coalesce(bit_xor(xxhash64(doc_id, lang, text)), 0L)")).head
     (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }

@@ -33,7 +33,11 @@ object Clusters {
 
   /** @param vertices single column `id`
     * @param edges columns `src`, `dst` (undirected; one row per pair)
-    * @return (id, label) — label = min vertex id of the component
+    * @return (id, label) — label = min vertex id of the component, one
+    *   row per distinct id. With no edge (every incremental delta
+    *   without an in-batch near-dup) that is `(id, id)` and returns
+    *   right after the symmetrize checkpoint, unmaterialized, instead of
+    *   running a round only to find the labels unchanged.
     */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 20): DataFrame = {
@@ -41,6 +45,10 @@ object Clusters {
     val sym = edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint()
+    // no edge: every vertex is its own component, the fixpoint the
+    // rounds below would reach after collapsing duplicate ids
+    if (isEmpty(sym))
+      return vertices.select(col("id"), col("id").as("label")).distinct()
     var labels = vertices.select(col("id"), col("id").as("label"))
       .localCheckpoint()
     // decimal sum: immune to long overflow at billion-vertex id ranges.
@@ -75,6 +83,14 @@ object Clusters {
           "(use connectedComponentsStar for long-chain graphs)")
     labels
   }
+
+  /** True when `df` has no row, in one job of one task per partition
+    * (`Dataset.isEmpty` scans partitions in growing rounds, one job
+    * each, before it can answer "empty"). Meant for checkpointed
+    * frames, whose partitions are already computed. */
+  private def isEmpty(df: DataFrame): Boolean =
+    !df.rdd.mapPartitions(rows => Iterator.single(rows.hasNext))
+      .collect().contains(true)
 
   /** Alternating large-star/small-star connected components (Kiveris et
     * al., "Connected Components in MapReduce and Beyond", SoCC'14) — the

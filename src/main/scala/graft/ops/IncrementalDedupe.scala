@@ -97,12 +97,16 @@ object IncrementalDedupe {
     * {'kept', 'dup_base', 'dup_delta'}.
     *
     * Shuffle accounting: the delta is banded ONCE — the repartition on
-    * (band, band_sig) materializes a single exchange reused by BOTH the
-    * within-delta self-join and the probe into the state index (the
-    * minhashLshPairs barrier trick, extended to a second consumer).
-    * Candidates carry only ids; landed text joins in candidate-wise
-    * (BEFORE shingling, so the shingle arrays of non-candidates are
-    * never built). Component finding runs on (long, long) pairs only.
+    * (band, band_sig) materializes a single exchange reused by all three
+    * join sides of the ONE candidate relation: the within-delta
+    * self-join and the probe into the state index, unioned and tagged
+    * by side (`base`). That relation is checkpointed, so the
+    * within-delta verify, the landed-text fetch and the base verify all
+    * read it instead of re-running the banding and re-exploding the
+    * landed index each. Candidates carry only ids; landed text joins in
+    * candidate-wise (BEFORE shingling, so the shingle arrays of
+    * non-candidates are never built). Component finding runs on
+    * (long, long) pairs only.
     *
     * `fetchText` receives the distinct candidate-id relation (one
     * column, `idCol`) and must return (idCol, textCol) rows covering at
@@ -115,26 +119,32 @@ object IncrementalDedupe {
   def neardupVerdicts(delta: DataFrame, idCol: String, textCol: String,
       stateBands: DataFrame, fetchText: DataFrame => DataFrame,
       threshold: Double): DataFrame = {
-    // one banded exchange, two consumers (self-join sides + state probe)
+    // one banded exchange, three consumers (self-join sides + state probe)
     val banded = TextDedupe.bandRows(delta, idCol, textCol)
       .repartition(col("band"), col("band_sig"))
     val a = banded.select(col(idCol).as("d1"), col("band"), col("band_sig"))
     val b = banded.select(col(idCol).as("d2"), col("band"), col("band_sig"))
-
-    // within-delta exact near-dup pair relation (LSH candidates,
-    // exact-Jaccard verified — same relation minhashLshPairs computes)
-    val deltaCand = a.join(b, Seq("band", "band_sig"))
+    val landed = stateBands
+      .select(col(idCol).as("d2"), col("band"), col("band_sig"))
+    // LSH candidates, within the delta (d1 < d2) and against the landed
+    // index (base), as one materialized relation
+    val cand = a.join(b, Seq("band", "band_sig"))
       .filter(col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    val deltaPairs = TextDedupe.verifyJaccard(
-      deltaCand, delta, delta, idCol, textCol, threshold)
+      .select(col("d1"), col("d2"), lit(false).as("base"))
+      .union(a.join(landed, Seq("band", "band_sig"))
+        .select(col("d1"), col("d2"), lit(true).as("base")))
+      .distinct()
+      .localCheckpoint()
 
-    // delta-vs-landed candidates from the persisted band index
-    val baseCand = a.join(
-        stateBands.select(col(idCol).as("d2"), col("band"), col("band_sig")),
-        Seq("band", "band_sig"))
-      .select("d1", "d2").distinct()
-    // fetch ONLY candidate canonicals' text before shingling
+    // within-delta exact near-dup pair relation (exact-Jaccard verified
+    // — same relation minhashLshPairs computes)
+    val deltaPairs = TextDedupe.verifyJaccard(
+      cand.filter(!col("base")).select("d1", "d2"),
+      delta, delta, idCol, textCol, threshold)
+
+    // delta-vs-landed: fetch ONLY candidate canonicals' text before
+    // shingling
+    val baseCand = cand.filter(col("base")).select("d1", "d2")
     val candBase = fetchText(
       baseCand.select(col("d2").as(idCol)).distinct())
     val baseHits = TextDedupe.verifyJaccard(

@@ -177,15 +177,25 @@ object TextOps {
 
   def curate(docs: DataFrame, idCol: String, textCol: String,
       minTokens: Int, maxTokens: Int, minQuality: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val norm = lower(trim(regexp_replace(col(textCol), "\\s+", " ")))
-    val keeper = min(col(idCol))
-      .over(Window.partitionBy(length(norm), fingerprint(norm)))
-    val reason =
-      curateStatelessReason(textCol, minTokens, maxTokens, minQuality)
-        .when(col(idCol) =!= keeper, "duplicate")
+    val reason = curateReason(idCol, textCol, minTokens, maxTokens,
+      minQuality, length(norm), fingerprint(norm))
     docs.select(col(idCol), reason.as("reject_reason"),
       reason.isNull.as("keep"))
+  }
+
+  /** [[curate]]'s `reject_reason` as a column over the caller's own rows
+    * (null = kept), for callers that carry their columns through the
+    * filter instead of joining the verdict back. `dupKey` partitions the
+    * keep-first duplicate window: any injective function of curate's
+    * `(length(norm), fingerprint(norm))` pair groups the same rows —
+    * `IncrementalDedupe.exactKey` is one. */
+  def curateReason(idCol: String, textCol: String, minTokens: Int,
+      maxTokens: Int, minQuality: Double, dupKey: Column*): Column = {
+    import org.apache.spark.sql.expressions.Window
+    val keeper = min(col(idCol)).over(Window.partitionBy(dupKey: _*))
+    curateStatelessReason(textCol, minTokens, maxTokens, minQuality)
+      .when(col(idCol) =!= keeper, "duplicate")
   }
 
   /** PII scrubbing patterns — the pre-training redaction pass. ASCII-only

@@ -440,6 +440,21 @@ class ClustersSpec extends SparkSpec {
     assert(star(Seq.empty, Seq.empty).isEmpty)
   }
 
+  test("no edges: one (id, id) row per distinct vertex, as the " +
+      "propagation rounds return it") {
+    def rows(vs: Seq[Long], es: Seq[(Long, Long)]) =
+      Clusters.connectedComponents(vs.toDF("id"), es.toDF("src", "dst"))
+        .as[(Long, Long)].collect().toSeq.sorted
+    // a self-loop on an absent vertex propagates nothing but keeps the
+    // edge relation non-empty, so the rounds run: the pre-shortcut path
+    val roundsPath = Seq((99L, 99L))
+    for (vs <- Seq(Seq(3L, 1L, 2L), Seq(5L, 5L, 1L, 5L, 1L), Seq.empty)) {
+      val got = rows(vs, Nil)
+      assert(got == vs.distinct.sorted.map(v => (v, v)), vs)
+      assert(got == rows(vs, roundsPath), vs)
+    }
+  }
+
   test("star variant matches min-label on a mixed graph") {
     val vs = (1L to 15L) :+ 30L
     val es = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 5L), (6L, 5L),

@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.jobs.{CorpusKnobs, CorpusStreamJob, IncrementalCorpusJob}
 
 /** The streaming corpus lifecycle: a file-source drain must land the
@@ -184,6 +185,70 @@ class CorpusStreamJobSpec extends SparkSpec {
         tmp("graft_cs_nocorpus"), tmp("graft_cs_nostate"), openKnobs)
     }
     assert(e.getMessage.contains("bootstrap"), e.getMessage)
+  }
+
+  test("an empty batch returns None and leaves the chain untouched") {
+    val baseDir = tmp("graft_cs_mbase")
+    mkDocs(1L to 30L).coalesce(1).write.mode("overwrite")
+      .parquet(s"$baseDir/documents.parquet")
+    val (corpus, stateRoot) = (tmp("graft_cs_mcorpus"), tmp("graft_cs_mstate"))
+    IncrementalCorpusJob.bootstrap(spark, baseDir, corpus,
+      s"$stateRoot/snap=0", minTokens = 1, maxTokens = 10000,
+      minQuality = 0.0, numShards = 2)
+    def listing(dir: String): Seq[String] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.map(p => s"$p ${Files.size(p)}")
+        .toList.sorted
+      finally walk.close()
+    }
+    val staging = s"${corpus.stripSuffix("/")}.staging"
+    val chainBefore = CorpusStreamJob.chainDirs(spark, stateRoot)
+    val before = Seq(stateRoot, corpus, staging).map(listing)
+    assert(CorpusStreamJob.ingestBatch(spark, mkDocs(Nil), corpus,
+      stateRoot, openKnobs).isEmpty)
+    assert(CorpusStreamJob.chainDirs(spark, stateRoot) == chainBefore)
+    assert(Seq(stateRoot, corpus, staging).map(listing) == before)
+    // the next batch still lands as generation 1
+    assert(CorpusStreamJob.ingestBatch(spark, mkDocs(31L to 40L), corpus,
+      stateRoot, openKnobs).map(_.generation).contains(1))
+  }
+
+  test("a generation's Spark jobs do not grow with history: generation " +
+      "8 runs no more jobs than generation 2") {
+    import spark.implicits._
+    def words(i: Long) = (0 until 30)
+      .map(j => if (j % 10 == 5) "the" else s"w${i}_$j")
+    val baseDir = tmp("graft_cs_jbase")
+    mkDocs(1L to 30L).coalesce(1).write.mode("overwrite")
+      .parquet(s"$baseDir/documents.parquet")
+    val (corpus, stateRoot) = (tmp("graft_cs_jcorpus"), tmp("graft_cs_jstate"))
+    IncrementalCorpusJob.bootstrap(spark, baseDir, corpus,
+      s"$stateRoot/snap=0", minTokens = 1, maxTokens = 10000,
+      minQuality = 0.0, numShards = 2)
+    // generation g: 10 fresh docs, an exact copy of a bootstrap doc, and
+    // a near copy (first word replaced) of one doc from EVERY earlier
+    // generation, so the candidate-text fetch touches all of them
+    val jobs = (1 to 8).map { g =>
+      val first = (h: Int) => if (h == 0) 1L else 100L * h
+      val rows = (0 until 10).map(k => (100L * g + k, words(100L * g + k))) ++
+        (0 until g).map(h => (100L * g + 10 + h,
+          s"n${100L * g + 10 + h}" +: words(first(h)).tail)) :+
+        ((100L * g + 50, words(2L)))
+      val batch = rows.map { case (i, ws) => (i, "en", ws.mkString(" ")) }
+        .toDF("doc_id", "lang", "text")
+      val tally = new JobTally(spark, s"gen$g")
+      val r = tally.run(CorpusStreamJob.ingestBatch(spark, batch, corpus,
+        stateRoot, openKnobs)).get
+      assert((r.generation, r.nKept, r.nDupBase, r.nExactFresh) ==
+        (g, 10L, g.toLong, 10L + g), r.toString)
+      assert(tally.outsideGroup == 0)
+      tally.inGroup
+    }
+    // every stage of a generation runs once (48 jobs on this session);
+    // reading each touched generation on its own made the count grow
+    // with every generation a delta's near-copies reach back to
+    info(s"Spark jobs per generation: ${jobs.mkString(", ")}")
+    assert(jobs(7) <= jobs(1) && jobs.max <= 55, jobs)
   }
 
   test("prepare repairs the kill windows: a committed-snapshot/" +

@@ -337,6 +337,72 @@ class IncrementalCorpusJobSpec extends SparkSpec {
     assert(dup.getMessage.contains("already exists"), dup.getMessage)
   }
 
+  test("every DeltaReport field equals a direct recount, on a mixed " +
+      "delta and on an all-dropped one") {
+    import graft.ops.{IncrementalDedupe, TextOps}
+    val corpus = tmp("graft_recount") + "/corpus"
+    val st = (0 to 2).map(i => tmp(s"graft_rc$i"))
+    IncrementalCorpusJob.bootstrap(spark,
+      writeDocsDir(mk(1L -> doc2(1), 2L -> doc2(101))), corpus, st(0))
+
+    /** Each report field recounted from the delta, the chain it was
+      * ingested against and the landed generation, without the job. */
+    def recount(delta: org.apache.spark.sql.DataFrame, gen: Int,
+        chain: Seq[String], landedBefore: org.apache.spark.sql.DataFrame)
+        : IncrementalCorpusJob.DeltaReport = {
+      val cur = TextOps.curate(delta, "doc_id", "text", 20, 90, 0.58)
+        .filter(col("keep")).select("doc_id")
+      val curated = delta.join(cur, "doc_id")
+      val landedKeys = spark.read.parquet(chain.map(_ + "/keys"): _*)
+      val fresh = curated
+        .withColumn("k", IncrementalDedupe.exactKey(col("text")))
+        .join(landedKeys.select("k"), Seq("k"), "left_anti")
+        .select("doc_id", "lang", "text")
+      val status = IncrementalDedupe.neardupVerdicts(fresh, "doc_id",
+          "text", IncrementalDedupe.explodeBands(
+            spark.read.parquet(chain.map(_ + "/bands"): _*), "doc_id"),
+          landedBefore.select("doc_id", "text"), 0.5)
+        .groupBy("status").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      val genDir = s"$corpus/gen=$gen"
+      val (nseq, tok) =
+        if (!new java.io.File(genDir).exists()) (0L, 0L)
+        else {
+          val a = spark.read.parquet(genDir).agg(
+            count_distinct(col("lang"), col("bin_id")), sum("n_tokens")).head
+          (a.getLong(0), a.getLong(1))
+        }
+      IncrementalCorpusJob.DeltaReport(gen, delta.count(), curated.count(),
+        fresh.count(), status.getOrElse("kept", 0L),
+        status.getOrElse("dup_base", 0L), status.getOrElse("dup_delta", 0L),
+        nseq, tok, genDir, st(gen))
+    }
+
+    // kept (20, 21), within-delta exact copy of 20 (26, curated out),
+    // dup_delta (22 ~ 21, J = 15/21), dup_base (23 ~ landed 1), an exact
+    // copy of landed 2 (24) and a too-short doc without "the" (25)
+    val mixed = mk(20L -> doc2(201), 21L -> doc2(301), 22L -> doc2(304),
+      23L -> doc2(4), 24L -> doc2(101), 25L -> "x y z", 26L -> doc2(201))
+    val before1 = spark.read.parquet(corpus).localCheckpoint()
+    val r1 = IncrementalCorpusJob.ingestDelta(spark, mixed, 1, corpus,
+      Seq(st(0)), st(1))
+    assert(r1 == recount(mixed, 1, Seq(st(0)), before1))
+    assert((r1.nDelta, r1.nCurated, r1.nExactFresh, r1.nKept, r1.nDupBase,
+      r1.nDupDelta) == (7L, 5L, 4L, 2L, 1L, 1L), r1.toString)
+    assert(r1.nSequences > 0 && r1.totalTokens == 40L, r1.toString)
+
+    // nothing survives: an exact copy, a near copy and a curation reject
+    val dropped = mk(30L -> doc2(1), 31L -> doc2(204), 32L -> "x y z")
+    val before2 = spark.read.parquet(corpus).localCheckpoint()
+    val r2 = IncrementalCorpusJob.ingestDelta(spark, dropped, 2, corpus,
+      Seq(st(0), st(1)), st(2))
+    assert(r2 == recount(dropped, 2, Seq(st(0), st(1)), before2))
+    assert((r2.nDelta, r2.nCurated, r2.nExactFresh, r2.nKept, r2.nDupBase,
+      r2.nDupDelta, r2.nSequences, r2.totalTokens) ==
+      (3L, 2L, 1L, 0L, 1L, 0L, 0L, 0L), r2.toString)
+    assert(!new java.io.File(r2.genDir).exists())
+  }
+
   test("compaction mid-chain: compact → more deltas ≡ the uncompacted " +
       "chain, and both dedupe tiers keep firing through the merge") {
     def runChain(corpus: String, compactAfter1: Boolean)

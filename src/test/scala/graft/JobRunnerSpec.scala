@@ -62,8 +62,8 @@ class JobRunnerSpec extends SparkSpec {
     val sink = JdbcSink("jdbc:derby:memory:e2e;create=true")
     val runner = new JobRunner(spark, sink, input.toString, processed, problems)
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
-    val jobs = new JobTally("e2e")
-    val results = jobs.sweep(runner)
+    val jobs = new JobTally(spark, "e2e")
+    val results = jobs.run(runner.runAll())
     assert(results.size == 1 && results.head._2.isRight)
     // the stats threads inherit the sweeping thread's job group, and
     // neither a thread nor a job outlives the sweep
@@ -128,8 +128,8 @@ class JobRunnerSpec extends SparkSpec {
 
     // the queue is empty now: the resident job sweeps, upserts nothing,
     // and must not re-run the stats (no Spark job at all)
-    val jobs = new JobTally("nostats")
-    val again = jobs.sweep(runner)
+    val jobs = new JobTally(spark, "nostats")
+    val again = jobs.run(runner.runAll())
     assert(again.size == 1 && again.head._2.isRight)
     assert(jobs.inGroup == 0 && jobs.outsideGroup == 0, jobs.inGroup)
     assert(contents == before)
@@ -141,8 +141,8 @@ class JobRunnerSpec extends SparkSpec {
       """{"Kind":"descriptive"},{"Kind":"H","GroupBy":"Nope"},
         |{"Kind":"D","GroupBy":"Nope"}""".stripMargin)
     Files.write(samples.resolve("a.csv"), sensorCsv.getBytes)
-    val jobs = new JobTally("badstats")
-    val res = jobs.sweep(runner)
+    val jobs = new JobTally(spark, "badstats")
+    val res = jobs.run(runner.runAll())
     assert(res.size == 1 && res.head._2.isLeft)
     assert(res.head._2.swap.toOption.get.contains("Nope"))
     assert(jobs.running == 0 && statsThreads.isEmpty, statsThreads)
@@ -162,6 +162,27 @@ class JobRunnerSpec extends SparkSpec {
     // is collapsed like the stat lines'
     assert(problems.size == 3 && problems.forall(_.nonEmpty), problems)
     assert(sink.recordCount(s"${table}__descriptive") == 11)
+  }
+
+  test("a resident job's later sweeps compile no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (runner, _, samples) = sensorQueue("codegen",
+      """{"Kind":"descriptive"},{"Kind":"mode"},
+        |{"Kind":"H","GroupBy":"Sensor_id","DropColumns":"LAT,LONG"}"""
+        .stripMargin)
+    val compiled = (1 to 3).map { i =>
+      Files.write(samples.resolve(s"s$i.csv"), sensorCsv.getBytes)
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(runner.runAll().head._2.isRight)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    // the third sweep runs the second's plans, so its generated classes
+    // are cache hits while the cache holds a sweep's working set and its
+    // key (which includes the context classloader) is stable: 0 compiled
+    // when this suite runs alone; 6 in a whole-suite run, whose earlier
+    // suites fill the cache so its approximate-LRU eviction drops a few;
+    // ~150 on every sweep with Spark's default settings
+    assert(compiled(2) <= 30, compiled)
   }
 
   private val sensorCsv =
@@ -208,49 +229,6 @@ class JobRunnerSpec extends SparkSpec {
     (1 to 20).exists { _ =>
       cond || { System.gc(); Thread.sleep(250); cond }
     }
-
-  /** Counts the Spark jobs of one sweep by job group. The sweep runs
-    * under its own group; a sentinel job under another group then fences
-    * the listener bus, which delivers job events in submission order. */
-  private class JobTally(name: String)
-      extends org.apache.spark.scheduler.SparkListener {
-    import org.apache.spark.scheduler.{SparkListenerJobEnd, SparkListenerJobStart}
-    private val started = new java.util.concurrent.ConcurrentHashMap[Int, String]
-    private val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
-    private val group = s"jobtally-$name-${System.nanoTime()}"
-
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      started.put(e.jobId, Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.add(e.jobId)
-
-    private def groups: Seq[String] = {
-      val b = Seq.newBuilder[String]
-      started.forEach((_, g) => b += g)
-      b.result()
-    }
-    private val fence = "jobtally-fence"
-    def inGroup: Int = groups.count(_ == group)
-    def outsideGroup: Int = groups.count(g => g != group && g != fence)
-    def running: Int = started.keySet.stream
-      .filter(id => !ended.contains(id) && started.get(id) != fence).count.toInt
-
-    def sweep(runner: JobRunner) = {
-      val sc = spark.sparkContext
-      sc.addSparkListener(this)
-      try {
-        sc.setJobGroup(group, name)
-        val res = try runner.runAll() finally sc.clearJobGroup()
-        sc.setJobGroup(fence, fence)
-        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-        val deadline = System.nanoTime() + 60e9.toLong
-        while (!groups.contains(fence) && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        assert(groups.contains(fence), "listener bus did not drain")
-        res
-      } finally sc.removeSparkListener(this)
-    }
-  }
 
   test("corpus kinds: queue drives bootstrap + delta end-to-end; " +
       "job files archive; bad kinds and broken deltas hit problems/") {

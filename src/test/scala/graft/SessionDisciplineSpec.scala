@@ -36,5 +36,8 @@ class SessionDisciplineSpec extends SparkSpec {
     assert(conf.get("spark.sql.streaming.stateStore.maintenanceInterval")
       == "86400s")
     assert(conf.get("spark.ui.enabled") == "false")
+    // resident codegen: see LocalSession
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") == "1000")
+    assert(conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 }
