@@ -1,9 +1,12 @@
 package graft.jobs
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.ingest.CsvIngest
@@ -12,8 +15,9 @@ import graft.sink.{Catalog, JdbcSink, SinkOps}
 
 /** The reference's whole lifecycle (`datapump.py` Entry 1-3, SURVEY §3):
   * scan a queue directory for `*-job.json`, and per job: glob input CSVs
-  * newest-first, per file read → order-sensitive PK dedupe → type-infer →
-  * ensure/truncate/upsert sink table → restamp resource description →
+  * newest-first, per file read + type-infer → ensure/truncate sink table →
+  * one Spark action that runs the order-sensitive PK dedupe, upserts the
+  * result and yields PROCESSED/DUPES → restamp resource description →
   * archive the input to processed/ (or problems/ on failure), logging
   * DUPES/PROCESSED/ELAPSED. After the files, and only in a sweep that
   * upserted at least one of them, the requested stats run over one
@@ -40,6 +44,9 @@ class JobRunner(
     dateformats: Seq[String] = CsvIngest.DefaultFormats) {
 
   val catalog = new Catalog(sink)
+
+  /** How long a drop waits, after its upsert, for the observed counts. */
+  private val ObservedWait = 60.seconds
 
   private def log(file: String, line: String): Unit = {
     val p = Paths.get(file)
@@ -237,6 +244,13 @@ class JobRunner(
     if (interrupted) Thread.currentThread().interrupt()
   }
 
+  /** One drop: the CSV read (its inference jobs), then exactly one Spark
+    * action — the upsert, which dedupes the file on its way into the sink.
+    * Two counts observed on that same pass give the logged numbers: every
+    * row before the dedupe, and every row after it. keepFirst/keepLast
+    * emit exactly one row per PK group, so the second count IS the
+    * distinct-PK count (`PROCESSED`), and `DUPES` is the difference.
+    * Returns (PROCESSED, DUPES). */
   private def processFile(path: String, job: Job, table: String)
       : (Long, Long) = {
     val raw = CsvIngest.readCsv(spark, path, dateformats)
@@ -244,29 +258,35 @@ class JobRunner(
       throw new IllegalArgumentException(
         s"primary key column '$missing' absent from $path")
     }
-    // cache the stamped frame: three actions run over it (count,
-    // distinct-count, upsert) and without the cache each one re-reads and
-    // re-infers the CSV. One file fits executor memory by construction
-    // (the reference holds it whole in pandas).
-    val stamped = Dedupe.withArrivalOrder(raw.coalesce(1)).cache()
-    try {
-      val total = stamped.count()
-      val distinctPk =
-        stamped.select(job.primaryKey.map(col): _*).distinct().count()
-      val deduped = (if (job.dedupe == "first")
-          Dedupe.keepFirst(stamped, job.primaryKey, col("__arrival"))
-        else Dedupe.keepLast(stamped, job.primaryKey, col("__arrival")))
-        .drop("__arrival")
-      sink.ensureTable(table, deduped.schema, job.primaryKey)
-      if (job.truncate) sink.truncate(table)
-      sink.upsert(deduped, table, job.primaryKey)
-      catalog.updateDescription(table,
-        java.time.LocalDateTime.now().withNano(0).toString.replace('T', ' '))
-      // keepFirst/keepLast emit exactly one row per PK group, so the
-      // processed-row count IS the distinct-PK count — no third scan
-      (distinctPk, total - distinctPk)
-    } finally stamped.unpersist()
+    val total = Observation()
+    val kept = Observation()
+    val stamped = Dedupe.withArrivalOrder(raw.coalesce(1))
+      .observe(total, count(lit(1)).as("rows"))
+    val deduped = (if (job.dedupe == "first")
+        Dedupe.keepFirst(stamped, job.primaryKey, col("__arrival"))
+      else Dedupe.keepLast(stamped, job.primaryKey, col("__arrival")))
+      .drop("__arrival")
+      .observe(kept, count(lit(1)).as("rows"))
+    sink.ensureTable(table, deduped.schema, job.primaryKey)
+    if (job.truncate) sink.truncate(table)
+    sink.upsert(deduped, table, job.primaryKey)
+    catalog.updateDescription(table,
+      java.time.LocalDateTime.now().withNano(0).toString.replace('T', ' '))
+    val processed = observedCount(kept, path)
+    (processed, observedCount(total, path) - processed)
   }
+
+  /** The count an [[Observation]] took during the upsert. It arrives
+    * through the listener bus shortly after the action returns; a bounded
+    * wait (`Observation.get` waits forever) turns a count that never
+    * comes into a failed drop instead of a hung sweep. */
+  private def observedCount(o: Observation, path: String): Long =
+    try Await.result(o.future, ObservedWait).getLong(0)
+    catch {
+      case _: TimeoutException => throw new TimeoutException(
+        s"row counts of $path were not observed within " +
+          s"$ObservedWait of its upsert")
+    }
 
   private def runStat(st: StatSpec, acc: DataFrame, target: String): Unit =
     st.kind match {

@@ -45,6 +45,11 @@ class Catalog(sink: JdbcSink) {
 
   def description(resource: String): Option[String] = {
     ensureMeta()
+    storedDescription(resource)
+  }
+
+  /** The meta table's description of a resource; the table must exist. */
+  private def storedDescription(resource: String): Option[String] = {
     val c = sink.connect()
     try {
       val ps = c.prepareStatement(
@@ -58,7 +63,7 @@ class Catalog(sink: JdbcSink) {
   /** Upsert the stamped description for a resource. */
   def updateDescription(resource: String, ts: String): String = {
     ensureMeta()
-    val prior = description(resource).getOrElse(resource)
+    val prior = storedDescription(resource).getOrElse(resource)
     val stamped = stampDescription(prior, ts)
     val c = sink.connect()
     try {

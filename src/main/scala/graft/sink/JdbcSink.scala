@@ -27,6 +27,24 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     if (user.isEmpty) DriverManager.getConnection(url)
     else DriverManager.getConnection(url, user, password)
 
+  /** Runs `body` as one transaction on a fresh connection. On failure
+    * the transaction is rolled back before the connection closes: Derby
+    * refuses to close a connection with an open transaction, which would
+    * leak it together with its row locks, and every later write to those
+    * rows would then fail on a lock timeout. */
+  private def transaction(body: Connection => Unit): Unit = {
+    val c = connect()
+    try {
+      c.setAutoCommit(false)
+      body(c)
+      c.commit()
+    } catch {
+      case e: Throwable =>
+        try c.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+        throw e
+    } finally c.close()
+  }
+
   private def sqlType(dt: DataType): String = dt match {
     case LongType | IntegerType | ShortType | ByteType => "BIGINT"
     case DoubleType | FloatType => "DOUBLE PRECISION"
@@ -156,51 +174,46 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     val self = this
     val twoPhase = sql2 != null
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) {
-        val c = self.connect()
-        try {
-          c.setAutoCommit(false)
-          val ps1 = c.prepareStatement(sql1)
-          val ps2 = if (twoPhase) c.prepareStatement(sql2) else null
-          var n = 0
-          rows.foreach { row =>
-            if (twoPhase) {
-              // derby: delete by PK, then insert the full row
-              var j = 0
-              while (j < pkIdx.length) {
-                ps1.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
-              }
-              ps1.addBatch()
-              var i = 0
-              while (i < cols.length) {
-                val v = row.get(i)
-                if (v == null) ps2.setNull(i + 1, types(i))
-                else ps2.setObject(i + 1, coerce(v))
-                i += 1
-              }
-              ps2.addBatch()
-            } else {
-              var i = 0
-              while (i < cols.length) {
-                val v = row.get(i)
-                if (v == null) ps1.setNull(i + 1, types(i))
-                else ps1.setObject(i + 1, coerce(v))
-                i += 1
-              }
-              ps1.addBatch()
+      if (rows.nonEmpty) self.transaction { c =>
+        val ps1 = c.prepareStatement(sql1)
+        val ps2 = if (twoPhase) c.prepareStatement(sql2) else null
+        var n = 0
+        rows.foreach { row =>
+          if (twoPhase) {
+            // derby: delete by PK, then insert the full row
+            var j = 0
+            while (j < pkIdx.length) {
+              ps1.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
             }
-            n += 1
-            if (n % batchSize == 0) {
-              ps1.executeBatch()
-              if (twoPhase) ps2.executeBatch()
+            ps1.addBatch()
+            var i = 0
+            while (i < cols.length) {
+              val v = row.get(i)
+              if (v == null) ps2.setNull(i + 1, types(i))
+              else ps2.setObject(i + 1, coerce(v))
+              i += 1
             }
+            ps2.addBatch()
+          } else {
+            var i = 0
+            while (i < cols.length) {
+              val v = row.get(i)
+              if (v == null) ps1.setNull(i + 1, types(i))
+              else ps1.setObject(i + 1, coerce(v))
+              i += 1
+            }
+            ps1.addBatch()
           }
-          ps1.executeBatch()
-          if (twoPhase) ps2.executeBatch()
-          c.commit()
-          ps1.close()
-          if (twoPhase) ps2.close()
-        } finally c.close()
+          n += 1
+          if (n % batchSize == 0) {
+            ps1.executeBatch()
+            if (twoPhase) ps2.executeBatch()
+          }
+        }
+        ps1.executeBatch()
+        if (twoPhase) ps2.executeBatch()
+        ps1.close()
+        if (twoPhase) ps2.close()
       }
     }
   }
@@ -217,28 +230,23 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
       s"VALUES (${cols.map(_ => "?").mkString(", ")})"
     val self = this
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) {
-        val c = self.connect()
-        try {
-          c.setAutoCommit(false)
-          val ps = c.prepareStatement(sql)
-          var n = 0
-          rows.foreach { row =>
-            var i = 0
-            while (i < cols.length) {
-              val v = row.get(i)
-              if (v == null) ps.setNull(i + 1, types(i))
-              else ps.setObject(i + 1, coerce(v))
-              i += 1
-            }
-            ps.addBatch()
-            n += 1
-            if (n % batchSize == 0) ps.executeBatch()
+      if (rows.nonEmpty) self.transaction { c =>
+        val ps = c.prepareStatement(sql)
+        var n = 0
+        rows.foreach { row =>
+          var i = 0
+          while (i < cols.length) {
+            val v = row.get(i)
+            if (v == null) ps.setNull(i + 1, types(i))
+            else ps.setObject(i + 1, coerce(v))
+            i += 1
           }
-          ps.executeBatch()
-          c.commit()
-          ps.close()
-        } finally c.close()
+          ps.addBatch()
+          n += 1
+          if (n % batchSize == 0) ps.executeBatch()
+        }
+        ps.executeBatch()
+        ps.close()
       }
     }
   }
@@ -256,25 +264,20 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
       pk.map(c => s""""$c" = ?""").mkString(" AND ")
     val self = this
     df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) {
-        val c = self.connect()
-        try {
-          c.setAutoCommit(false)
-          val ps = c.prepareStatement(sql)
-          var n = 0
-          rows.foreach { row =>
-            var j = 0
-            while (j < pkIdx.length) {
-              ps.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
-            }
-            ps.addBatch()
-            n += 1
-            if (n % batchSize == 0) ps.executeBatch()
+      if (rows.nonEmpty) self.transaction { c =>
+        val ps = c.prepareStatement(sql)
+        var n = 0
+        rows.foreach { row =>
+          var j = 0
+          while (j < pkIdx.length) {
+            ps.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
           }
-          ps.executeBatch()
-          c.commit()
-          ps.close()
-        } finally c.close()
+          ps.addBatch()
+          n += 1
+          if (n % batchSize == 0) ps.executeBatch()
+        }
+        ps.executeBatch()
+        ps.close()
       }
     }
   }

@@ -29,6 +29,21 @@ class JdbcSinkSpec extends SparkSpec {
     assert(back == Set((1L, "new"), (2L, "keep"), (3L, "ins")))
   }
 
+  test("a failed upsert rolls back and leaves no lock behind") {
+    val sink = freshSink("fail")
+    // one partition: the null PK fails the batch after rows 1 and 2
+    val df = Seq((1L, Option("a")), (2L, Option("b")), (3L, None))
+      .toDF("k", "s").coalesce(1)
+    sink.ensureTable("t_fail", df.schema, Seq("k", "s"))
+    intercept[org.apache.spark.SparkException](
+      sink.upsert(df, "t_fail", Seq("k", "s")))
+    // nothing committed, and the same keys write at once (an open
+    // transaction would hold their row locks until Derby's lock timeout)
+    assert(sink.recordCount("t_fail") == 0)
+    sink.upsert(df.filter($"s".isNotNull), "t_fail", Seq("k", "s"))
+    assert(sink.recordCount("t_fail") == 2)
+  }
+
   test("insert + delete-by-PK: absent-key delete is a no-op") {
     val sink = freshSink("del")
     val df = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s")

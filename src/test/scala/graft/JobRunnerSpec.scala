@@ -185,6 +185,88 @@ class JobRunnerSpec extends SparkSpec {
     assert(compiled(2) <= 30, compiled)
   }
 
+  test("a clean drop costs its CSV read's jobs plus one: the upsert") {
+    val (runner, _, samples) = sensorQueue("budget", "")
+    val copy = Files.createTempFile("graft-budget", ".csv")
+    Files.write(copy, sensorCsv.getBytes)
+    Files.write(samples.resolve("a.csv"), sensorCsv.getBytes)
+    val read = new JobTally(spark, "budget-read")
+    read.run(graft.ingest.CsvIngest.readCsv(spark, copy.toString))
+    val sweep = new JobTally(spark, "budget-sweep")
+    assert(sweep.run(runner.runAll()).head._2.isRight)
+    // the read's jobs infer the schema and the timestamp columns; the
+    // dedupe, the upsert and both logged counts are one more job
+    assert(read.inGroup == 4 && read.outsideGroup == 0, read.inGroup)
+    assert(sweep.inGroup == read.inGroup + 1 && sweep.outsideGroup == 0,
+      sweep.inGroup)
+    assert(processedLog(samples) == Seq("a.csv DUPES: 0 PROCESSED: 3"),
+      processedLog(samples))
+  }
+
+  test("PROCESSED/DUPES are exact under keep-first and keep-last") {
+    // six rows over three PKs: (10:00,s1) three times, (11:00,s1) twice
+    val csv = "DateTime,Sensor_id,pm25\n" +
+      "2024-01-01 10:00:00,s1,1.0\n" +
+      "2024-01-01 11:00:00,s1,2.0\n" +
+      "2024-01-01 10:00:00,s1,3.0\n" +
+      "2024-01-01 10:00:00,s2,4.0\n" +
+      "2024-01-01 11:00:00,s1,5.0\n" +
+      "2024-01-01 10:00:00,s1,6.0\n"
+    for ((dedupe, kept) <- Seq("first" -> Set(1.0, 2.0, 4.0),
+        "last" -> Set(6.0, 5.0, 4.0))) {
+      val (runner, sink, samples) = sensorQueue(s"exact$dedupe", "", dedupe)
+      Files.write(samples.resolve("a.csv"), csv.getBytes)
+      assert(runner.runAll().head._2.isRight)
+      assert(processedLog(samples) == Seq("a.csv DUPES: 3 PROCESSED: 3"),
+        processedLog(samples))
+      val pm = sink.readBack(spark, "etl_test__iot_test__air_quality")
+        .select("pm25").collect().map(_.getDouble(0)).toSet
+      assert(pm == kept, dedupe)
+    }
+  }
+
+  test("a header-only drop logs PROCESSED: 0 DUPES: 0 and is archived") {
+    val (runner, sink, samples) = sensorQueue("headeronly", "")
+    Files.write(samples.resolve("a.csv"), sensorCsv.getBytes)
+    assert(runner.runAll().head._2.isRight)
+    Files.write(samples.resolve("empty.csv"),
+      sensorCsv.linesIterator.next().concat("\n").getBytes)
+    val res = runner.runAll()
+    assert(res.size == 1 && res.head._2.isRight, res)
+    assert(processedLog(samples) == Seq("a.csv DUPES: 0 PROCESSED: 3",
+      "empty.csv DUPES: 0 PROCESSED: 0"), processedLog(samples))
+    assert(samples.getParent.resolve("processed").resolve("empty.csv")
+      .toFile.exists)
+    assert(sink.recordCount("etl_test__iot_test__air_quality") == 3)
+  }
+
+  test("a drop whose upsert fails goes to problems/; the next clean drop " +
+      "in the same sweep still logs exact counts") {
+    val (runner, sink, samples) = sensorQueue("badupsert", "")
+    // a null Sensor_id breaks the sink's NOT NULL primary key
+    val bad = samples.resolve("bad.csv")
+    Files.write(bad, (sensorCsv + "2024-01-01 12:00:00,,1.0,2.0,30.0\n")
+      .getBytes)
+    bad.toFile.setLastModified(1700000099000L) // newest: processed first
+    val good = samples.resolve("good.csv")
+    Files.write(good, (sensorCsv + "2024-01-01 10:30:00,s2,1.0,2.0,15.0\n")
+      .getBytes)
+    good.toFile.setLastModified(1700000000000L)
+    val res = runner.runAll()
+    assert(res.size == 1 && res.head._2.isRight, res)
+    val files = res.head._2.toOption.get.asInstanceOf[runner.JobResult].files
+    assert(files.map(f => (f.path.split('/').last, f.rows, f.dupes)) ==
+      Seq(("bad.csv", -1L, -1L), ("good.csv", 3L, 1L)), files)
+    val problems = samples.getParent.resolve("problems")
+    assert(problems.resolve("bad.csv").toFile.exists)
+    val plines = Files.readAllLines(problems.resolve("problems.log")).asScala
+    assert(plines.size == 1 && plines.head.contains("bad.csv FAILED"),
+      plines)
+    assert(processedLog(samples) == Seq("good.csv DUPES: 1 PROCESSED: 3"),
+      processedLog(samples))
+    assert(sink.recordCount("etl_test__iot_test__air_quality") == 3)
+  }
+
   private val sensorCsv =
     "DateTime,Sensor_id,LAT,LONG,pm25\n" +
       "2024-01-01 10:00:00,s1,1.0,2.0,10.0\n" +
@@ -194,19 +276,29 @@ class JobRunnerSpec extends SparkSpec {
   /** A queue holding one resident sensor job with the given `Stats`
     * items, over a fresh Derby database; files land in the returned
     * samples dir. */
-  private def sensorQueue(name: String, stats: String) = {
+  private def sensorQueue(name: String, stats: String,
+      dedupe: String = "last") = {
     val base = Files.createTempDirectory(s"graft-$name")
     val input = base.resolve("input"); Files.createDirectories(input)
     val samples = base.resolve("samples"); Files.createDirectories(samples)
     Files.write(input.resolve("sensors-job.json"),
       (s"""{"InputFile":"$samples/*.csv","TargetOrg":"etl-test",
           |"TargetPackage":"iot-test","TargetResource":"air-quality",
-          |"PrimaryKey":"DateTime,Sensor_id","Dedupe":"last",
+          |"PrimaryKey":"DateTime,Sensor_id","Dedupe":"$dedupe",
           |"Stats":[$stats]}""".stripMargin).getBytes)
     val sink = JdbcSink(s"jdbc:derby:memory:$name;create=true")
     val runner = new JobRunner(spark, sink, input.toString,
       base.resolve("processed").toString, base.resolve("problems").toString)
     (runner, sink, samples)
+  }
+
+  /** The processed.log lines of a [[sensorQueue]], each as `<file name>
+    * DUPES: d PROCESSED: p` (directory and ELAPSED dropped). */
+  private def processedLog(samples: java.nio.file.Path): Seq[String] = {
+    val log = samples.getParent.resolve("processed").resolve("processed.log")
+    if (!Files.exists(log)) Nil
+    else Files.readAllLines(log).asScala
+      .map(_.replaceAll("^\\S*/", "").replaceAll(" ELAPSED: .*", ""))
   }
 
   /** Order-insensitive content of a frame: its rows as strings, columns
