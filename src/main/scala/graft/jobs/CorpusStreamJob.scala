@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.jobs.IncrementalCorpusJob.{DeltaReport, GenMeta}
+import graft.jobs.IncrementalCorpusJob.DeltaReport
 
 /** CONTINUOUS corpus growth: a Structured Streaming file source watches
   * a landing directory for delta parquet drops and every micro-batch
@@ -24,18 +24,20 @@ import graft.jobs.IncrementalCorpusJob.{DeltaReport, GenMeta}
   *    (at-least-once replay on crash), and
   *  - the GENERATION commit protocol (staged dir + atomic rename,
   *    [[IncrementalCorpusJob]]) makes a landed generation detectable, so
-  *    [[ingestBatch]] recognizes a replayed batch by its id range and
-  *    skips it instead of landing it twice.
+  *    [[ingestBatch]] recognizes a replayed batch and skips it instead
+  *    of landing it twice.
   * A kill anywhere in between is repaired at the next [[run]] by the
   * pre-pass ([[prepare]]: [[IncrementalCorpusJob.recover]] on the chain
   * head and its successor) and the replay then no-ops. Replay
-  * recognition is EXACT: every snapshot records its batch's
-  * pre-curation id envelope ([[IncrementalCorpusJob.GenMeta]]), and
-  * file-source recovery reconstructs an uncommitted batch verbatim
-  * from its offset log — so a replay matches the head's envelope
-  * (even an all-dropped batch), while a NEW batch that merely covers
-  * the head's kept range does not and fails the ordering gate loudly
-  * instead of being silently swallowed.
+  * recognition is EXACT: every delta snapshot records its batch's
+  * pre-curation id envelope and content fingerprint
+  * ([[IncrementalCorpusJob.GenMeta]]), and file-source recovery
+  * reconstructs an uncommitted batch verbatim from its offset log — so
+  * a replay matches the head's envelope and fingerprint (even an
+  * all-dropped batch). Every other batch overlapping landed ids — one
+  * that merely covers the head's kept range, or any overlap of a
+  * bootstrap head, which records no envelope — fails the ordering gate
+  * loudly instead of being silently swallowed.
   *
   * State-root layout (owned by this job): snapshots live at
   * `stateRoot/snap=N`, one per generation. [[compactChain]] merges the
@@ -120,8 +122,8 @@ object CorpusStreamJob {
 
   /** Land one micro-batch as the next generation, or skip it: `None`
     * when the batch is empty or is a REPLAY of the chain head (its
-    * pre-curation id envelope equals the head's recorded one — the
-    * crash-recovery path, see class doc). A batch that overlaps landed
+    * pre-curation id envelope and content fingerprint equal the head's
+    * recorded ones — the crash-recovery path, see class doc). A batch that overlaps landed
     * ids without being that replay is an ordering violation and fails
     * loudly — skipping it would silently drop producer data. */
   def ingestBatch(spark: SparkSession, batch: DataFrame,
@@ -138,54 +140,38 @@ object CorpusStreamJob {
         "(IncrementalCorpusJob.bootstrap with stateOutDir " +
         s"$stateRoot/snap=0) before streaming deltas into it")
     val metas = IncrementalCorpusJob.readChainMeta(spark, chain)
-      .getOrElse(throw new IllegalStateException(
-        s"chain under $stateRoot is missing meta.json — stream-managed " +
-          "chains always carry it; was a foreign snapshot dir mixed in?"))
     val nextGen = metas.map(_.gen).max + 1
-    val landed = metas.filter(_.nKeys > 0)
-    val landedMax = if (landed.isEmpty) -1L else landed.map(_.maxDocId).max
-    // file-source recovery reconstructs an uncommitted batch EXACTLY
-    // from its offset log, so a replay's pre-curation id envelope
-    // equals the chain head's recorded one — including an all-dropped
-    // head, which kept-range tests could never recognize. The content
-    // fingerprint (r15) closes the residual hole: a genuinely NEW
-    // batch whose [min,max] coincides with the head's envelope
-    // (possible after an all-dropped head when a producer re-drops the
-    // same id range with different content) must NOT be skipped — on a
-    // fingerprint-recording chain it fails the gate loudly instead.
+    val landedMax = IncrementalCorpusJob.landedMax(metas)
+    // file-source recovery rebuilds an uncommitted batch verbatim from
+    // its offset log, so a replay equals the head's recorded envelope
+    // AND fingerprint — even an all-dropped head's. A new batch reusing
+    // that envelope with different content fails loudly; a bootstrap
+    // or rebuilt head records the sentinel envelope [0,-1], which no
+    // non-empty batch's envelope equals.
     val head = metas.maxBy(_.gen)
-    if (head.hasEnvelope && bMin == head.batchMin &&
-        bMax == head.batchMax) {
-      require(!head.hasFingerprint ||
-        (bCnt == head.batchCount && bHash == head.batchHash),
+    if (bMin == head.batchMin && bMax == head.batchMax) {
+      require(bCnt == head.batchCount && bHash == head.batchHash,
         s"batch matches generation ${head.gen}'s id envelope " +
           s"[$bMin,$bMax] but not its content fingerprint (count " +
           s"$bCnt vs ${head.batchCount}, hash $bHash vs " +
           s"${head.batchHash}) — a new batch may not reuse a landed " +
           "id range with different content")
       None
-    }
-    else if (bMin <= landedMax) {
-      // overlap with landed ids and NOT the head replay: on an
-      // envelope-recording chain this is always a producer ordering
-      // violation (a new batch merely COVERING the head's kept range
-      // must not be skipped — that loses its fresh docs); only a
-      // pre-envelope chain falls back to the kept-range subset test
-      val keptHead = landed.maxBy(_.gen)
-      require(!head.hasEnvelope &&
-        keptHead.minDocId >= bMin && keptHead.maxDocId <= bMax,
+    } else {
+      // overlap with landed ids and NOT the head replay: a producer
+      // ordering violation (a new batch merely COVERING the head's kept
+      // range must not be skipped — that loses its fresh docs)
+      require(bMin > landedMax,
         s"batch id range [$bMin,$bMax] overlaps landed ids (max " +
-          s"$landedMax) but is not a replay of generation ${head.gen}" +
-          (if (head.hasEnvelope)
-            s" (recorded envelope [${head.batchMin},${head.batchMax}])"
-          else "") +
-          " — delta drops must arrive in doc-id order")
-      None
-    } else Some(IncrementalCorpusJob.ingestDelta(spark, batch, nextGen,
-      corpusDir, chain, s"$stateRoot/snap=$nextGen",
-      knobs.minTokens, knobs.maxTokens, knobs.minQuality,
-      knobs.dedupeThreshold, knobs.budgetTokens, knobs.seed,
-      knobs.numShards, fingerprint = Some(fp)))
+          s"$landedMax) but is not a replay of generation ${head.gen} " +
+          s"(recorded envelope [${head.batchMin},${head.batchMax}]) — " +
+          "delta drops must arrive in doc-id order")
+      Some(IncrementalCorpusJob.ingestDelta(spark, batch, nextGen,
+        corpusDir, chain, s"$stateRoot/snap=$nextGen",
+        knobs.minTokens, knobs.maxTokens, knobs.minQuality,
+        knobs.dedupeThreshold, knobs.budgetTokens, knobs.seed,
+        knobs.numShards, fingerprint = Some(fp)))
+    }
   }
 
   /** Repair any crash window before draining: recover the chain head
@@ -205,13 +191,8 @@ object CorpusStreamJob {
         IncrementalCorpusJob.recover(spark, corpusDir, 0,
           s"$stateRoot/snap=0")
     } else {
-      // meta-less fallback parses the newest chain dir's own trailing
-      // number — `chain.size - 1` would equate directory count with
-      // max generation, which diverges on any chain holding a
-      // compact=K dir (or a gap) and would recover the wrong gens
       val maxGen = IncrementalCorpusJob.readChainMeta(spark, chain)
-        .map(_.map(_.gen).max)
-        .getOrElse(new Path(chain.last).getName.split('=')(1).toInt)
+        .map(_.gen).max
       // the head's own snap dir may be superseded by a compact=K — only
       // recover through it when it is live (recover would otherwise
       // "rebuild" a duplicate snapshot the discovery rule then ignores)
@@ -255,11 +236,8 @@ object CorpusStreamJob {
     require(chain.size > 1,
       s"chain under $stateRoot has ${chain.size} live snapshot(s) — " +
         "nothing to compact")
-    val metas = IncrementalCorpusJob.readChainMeta(spark, chain)
-      .getOrElse(throw new IllegalStateException(
-        s"chain under $stateRoot is missing meta.json — compacting " +
-          "without it would lose replay detection and fetch pruning"))
-    val k = metas.map(_.gen).max
+    val k = IncrementalCorpusJob.readChainMeta(spark, chain)
+      .map(_.gen).max
     val fs = new Path(stateRoot)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tmp = new Path(s"$stateRoot/compact.tmp")

@@ -27,13 +27,15 @@ import graft.ops.{CorpusOps, IncrementalDedupe, TextOps}
   *    generation, each holding ONLY that generation's additions
   *    (`keys/` exact-content keys, `bands/` the LSH band index packed
   *    as one 16-sig array row per landed canonical — ~150 B at rest,
-  *    independent of document size) plus a `meta.json` carrying the
-  *    generation's canonical count and id range, so chain-wide facts
-  *    (bloom sizing, the ordering check, fetch pruning ranges) cost a
-  *    driver-side metadata read instead of a state-chain scan. A run
-  *    reads the union of all prior snapshots and writes one new
-  *    snapshot: O(delta) writes, no state rewrite, and any generation
-  *    is reproducible by replaying the chain.
+  *    independent of document size) plus a MANDATORY `meta.json` (one
+  *    [[GenMeta]] per covered generation, every field present), so
+  *    chain-wide facts (bloom sizing, the ordering check, fetch pruning
+  *    ranges, the consistency gate) cost a driver-side metadata read
+  *    instead of a state-chain scan. Every writer records it; a
+  *    snapshot without it (or missing a field) fails every reader
+  *    ([[readChainMeta]]). A run reads the union of all prior snapshots
+  *    and writes one new snapshot: O(delta) writes, no state rewrite,
+  *    and any generation is reproducible by replaying the chain.
   *
   * Crash safety (single commit point + derivable state): a delta stages
   * its shards at `<corpusDir>.staging/gen=N` (a SIBLING dir of the
@@ -95,31 +97,21 @@ object IncrementalCorpusJob {
     * canonicals it landed and their id range (empty generation ⇒
     * `nKeys == 0`, range `[0, -1]` — matches nothing), plus the full
     * id ENVELOPE of the ingested batch BEFORE curation/dedupe
-    * (`batchMin`/`batchMax`; sentinel `[0, -1]` when unrecorded —
-    * bootstrap, or a pre-envelope chain). The envelope is what makes a
-    * crash-replayed batch exactly recognizable ([[graft.jobs.CorpusStreamJob]]):
-    * kept ranges alone cannot distinguish a replay from a new
-    * overlapping batch that happens to cover them. A compacted
-    * snapshot's meta carries one entry per covered generation, so
-    * compaction loses no pruning or replay precision.
-    *
-    * `batchCount`/`batchHash` (r15) are a cheap CONTENT fingerprint of
-    * the same pre-curation batch (row count + order-insensitive
-    * bit_xor of per-row xxhash64): envelope equality alone cannot
-    * distinguish a replay from a genuinely new batch whose [min,max]
-    * happens to coincide with the head's (possible after an
-    * all-dropped head when a producer re-drops the same id range with
-    * different content). Sentinel `batchCount = -1` on pre-fingerprint
-    * chains and rebuilt snapshots — recognition then degrades to
-    * envelope-only, the pre-r15 behavior. */
+    * (`batchMin`/`batchMax`) and a cheap CONTENT fingerprint of the
+    * same batch (`batchCount`/`batchHash`: row count + order-insensitive
+    * bit_xor of per-row xxhash64). Together they make a crash-replayed
+    * batch exactly recognizable ([[graft.jobs.CorpusStreamJob]]): kept
+    * ranges cannot tell a replay from a new overlapping batch that
+    * covers them, and the envelope alone cannot tell it from a new batch
+    * reusing an all-dropped head's id range with different content.
+    * Bootstrap and rebuilt snapshots ingest no batch and record the
+    * sentinels (envelope `[0, -1]`, count -1), which no non-empty
+    * batch's envelope equals. A compacted snapshot's meta carries one
+    * entry per covered generation, so compaction loses no pruning or
+    * replay precision. */
   case class GenMeta(gen: Int, nKeys: Long, minDocId: Long, maxDocId: Long,
       batchMin: Long = 0L, batchMax: Long = -1L,
-      batchCount: Long = -1L, batchHash: Long = 0L) {
-    /** True when the ingested batch's id envelope was recorded. */
-    def hasEnvelope: Boolean = batchMax >= batchMin
-    /** True when the ingested batch's content fingerprint was recorded. */
-    def hasFingerprint: Boolean = batchCount >= 0L
-  }
+      batchCount: Long = -1L, batchHash: Long = 0L)
 
   /** Full build of the initial corpus into `corpusDir/gen=0` plus the
     * generation-0 state snapshot, through the same staged commit
@@ -161,19 +153,15 @@ object IncrementalCorpusJob {
     require(generation > 0, "generation 0 is bootstrap's")
     val delta = deltaDocs.select("doc_id", "lang", "text")
       .localCheckpoint()
-    val chainMeta = readChainMeta(spark, stateInDirs)
-    chainMeta.foreach(validateChain(spark, corpusDir, _, generation))
+    val metas = readChainMeta(spark, stateInDirs)
+    validateChain(spark, corpusDir, metas, generation)
     val stateKeys = spark.read.parquet(stateInDirs.map(_ + "/keys"): _*)
     val stateBands = IncrementalDedupe.explodeBands(
       spark.read.parquet(stateInDirs.map(_ + "/bands"): _*), "doc_id")
 
     // ordering contract: landed ids all precede delta ids (keep-first
-    // parity with a full rebuild). With chain metadata this is a
-    // driver-side comparison; without it (a pre-metadata chain) it
-    // falls back to one agg over the key table.
-    val maxLanded = chainMeta
-      .map(_.filter(_.nKeys > 0).map(_.maxDocId).max)
-      .getOrElse(stateKeys.agg(max("doc_id")).head.getLong(0))
+    // parity with a full rebuild) — a driver-side comparison
+    val maxLanded = landedMax(metas)
     val (minDelta, maxDelta, nDelta, fpHash) =
       fingerprint.getOrElse(envelopeFingerprint(delta))
     require(nDelta > 0, s"delta for generation $generation is empty")
@@ -203,8 +191,7 @@ object IncrementalCorpusJob {
     // Sizing comes from chain metadata — the state chain is NOT
     // re-counted per delta (that second pass was r13's cost bug).
     // Result identical to a plain anti-join by construction.
-    val nLandedKeys = chainMeta.map(_.map(_.nKeys).sum)
-      .getOrElse(stateKeys.count())
+    val nLandedKeys = metas.map(_.nKeys).sum
     val bf = stateKeys.stat.bloomFilter("k",
       math.max(nLandedKeys, 1000L), 0.01)
     val bfBc = spark.sparkContext.broadcast(bf)
@@ -216,19 +203,12 @@ object IncrementalCorpusJob {
       .drop("__k").localCheckpoint()
 
     // stage 3: near-dup tier vs landed band index; landed TEXT is read
-    // candidate-wise — with chain metadata, through generation-pruned
-    // row-group-skipping reads (O(candidates) corpus I/O); without it,
-    // through the plain semi-join fetch (reads the corpus's two
-    // columns once)
-    val fetch: DataFrame => DataFrame = chainMeta match {
-      case Some(metas) =>
-        prunedTextFetch(spark, corpusDir, "doc_id", "text", metas)
-      case None => ids =>
-        spark.read.parquet(corpusDir).select("doc_id", "text")
-          .join(ids, Seq("doc_id"), "left_semi")
-    }
+    // candidate-wise, through generation-pruned row-group-skipping
+    // reads (O(candidates) corpus I/O)
     val verdicts = IncrementalDedupe.neardupVerdicts(fresh, "doc_id",
-      "text", stateBands, fetch, dedupeThreshold).localCheckpoint()
+      "text", stateBands,
+      prunedTextFetch(spark, corpusDir, "doc_id", "text", metas),
+      dedupeThreshold).localCheckpoint()
     // the funnel below the exact tier in one pass: verdicts hold one
     // row per exact-fresh doc
     val funnel = verdicts.agg(count(lit(1)),
@@ -371,12 +351,12 @@ object IncrementalCorpusJob {
     * chain. */
   def compactState(spark: SparkSession, stateInDirs: Seq[String],
       stateOutDir: String): Unit = {
+    val metas = readChainMeta(spark, stateInDirs)
     spark.read.parquet(stateInDirs.map(_ + "/keys"): _*)
       .write.mode("overwrite").parquet(s"$stateOutDir/keys")
     spark.read.parquet(stateInDirs.map(_ + "/bands"): _*)
       .write.mode("overwrite").parquet(s"$stateOutDir/bands")
-    readChainMeta(spark, stateInDirs).foreach(metas =>
-      writeMeta(spark, stateOutDir, metas.sortBy(_.gen)))
+    writeMeta(spark, stateOutDir, metas.sortBy(_.gen))
   }
 
   /** Repair a chain interrupted mid-commit. Returns what it did:
@@ -415,9 +395,8 @@ object IncrementalCorpusJob {
         require(fs.rename(stagP, genP), s"rename $stagP -> $genP failed")
         fs.delete(tmpP, true); "rolled-forward"
       } else {
-        val meta = readChainMeta(spark, Seq(stateDir))
-        val isEmpty = meta.exists(_.forall(m =>
-          m.gen != generation || m.nKeys == 0))
+        val isEmpty = readChainMeta(spark, Seq(stateDir))
+          .forall(m => m.gen != generation || m.nKeys == 0)
         if (isEmpty) { fs.delete(tmpP, true); "committed-empty" }
         else throw new IllegalStateException(
           s"snapshot $stateDir claims generation $generation landed " +
@@ -542,47 +521,44 @@ object IncrementalCorpusJob {
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
 
-  /** The chain's generation metadata, or None if ANY snapshot predates
-    * the metadata format (callers then fall back to state-scan
-    * derivations — correct, just not O(1)). */
+  /** The chain's generation metadata, in chain order: every
+    * snapshot's `meta.json` entries, all eight [[GenMeta]] fields
+    * required. Throws `IllegalStateException` naming the first snapshot
+    * dir whose `meta.json` is missing or lacks a field — every chain
+    * writer records it, so its absence means a foreign or damaged
+    * snapshot, which no reader may guess around. */
   def readChainMeta(spark: SparkSession,
-      stateInDirs: Seq[String]): Option[Seq[GenMeta]] = {
-    val per = stateInDirs.map { d =>
+      stateInDirs: Seq[String]): Seq[GenMeta] =
+    stateInDirs.flatMap { d =>
       val p = new Path(s"$d/meta.json")
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val items = JsonMethods.parse(txt) \ "gens" match {
-          case JArray(xs) => xs
+      if (!fs.exists(p)) throw new IllegalStateException(
+        s"snapshot $d has no meta.json — every snapshot this job " +
+          "writes records one; was a foreign dir mixed into the chain?")
+      val in = fs.open(p)
+      val txt =
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+        finally in.close()
+      val items = JsonMethods.parse(txt) \ "gens" match {
+        case JArray(xs) => xs
+        case other => throw new IllegalStateException(
+          s"bad meta.json in $d: gens = $other")
+      }
+      items.map { j =>
+        def l(f: String): Long = (j \ f) match {
+          case JInt(v) => v.toLong
           case other => throw new IllegalStateException(
-            s"bad meta.json in $d: gens = $other")
+            s"bad meta.json field $f in $d: $other")
         }
-        Some(items.map { j =>
-          def l(f: String): Long = (j \ f) match {
-            case JInt(v) => v.toLong
-            case other => throw new IllegalStateException(
-              s"bad meta.json field $f in $d: $other")
-          }
-          // envelope fields default to the sentinel on pre-envelope
-          // chains — GenMeta.hasEnvelope is then false
-          def lOpt(f: String, dflt: Long): Long = (j \ f) match {
-            case JInt(v) => v.toLong
-            case JNothing => dflt
-            case other => throw new IllegalStateException(
-              s"bad meta.json field $f in $d: $other")
-          }
-          GenMeta(l("gen").toInt, l("n_keys"), l("min_doc_id"),
-            l("max_doc_id"), lOpt("batch_min", 0L), lOpt("batch_max", -1L),
-            lOpt("batch_count", -1L), lOpt("batch_hash", 0L))
-        })
+        GenMeta(l("gen").toInt, l("n_keys"), l("min_doc_id"),
+          l("max_doc_id"), l("batch_min"), l("batch_max"),
+          l("batch_count"), l("batch_hash"))
       }
     }
-    if (per.exists(_.isEmpty)) None else Some(per.flatten.flatten)
-  }
+
+  /** The largest landed doc id of a chain (-1 when nothing landed). */
+  private[jobs] def landedMax(metas: Seq[GenMeta]): Long =
+    metas.filter(_.nKeys > 0).map(_.maxDocId).maxOption.getOrElse(-1L)
 
   /** Where generation `gen` stages before its commit rename: a sibling
     * of `corpusDir` (same filesystem → atomic rename; outside the

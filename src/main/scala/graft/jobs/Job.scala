@@ -79,7 +79,7 @@ object Job {
       catch { case e: Exception =>
         return Left(s"invalid JSON: ${e.getMessage}") }
     jv \ "Kind" match {
-      case JNothing | JString("Datapump") => parse(json)
+      case JNothing | JString("Datapump") => parseUpsert(jv)
       case JString("CorpusBuild") => parseCorpusBuild(jv)
       case JString("CorpusDelta") => parseCorpusDelta(jv)
       case JString("CorpusStream") => parseCorpusStream(jv)
@@ -163,27 +163,17 @@ object Job {
       mft <- optInt(jv, "MaxFilesPerTrigger", 1)
     } yield CorpusStreamSpec(landing, corpus, stateRoot, ckpt, knobs, mft)
 
-  /** Parse + validate a job JSON document, mirroring the reference's
+  /** Validate an upsert job document, mirroring the reference's
     * jsonschema checks (`datapump.py:402-417`): required fields, Dedupe
     * enum, Stats item shape. */
-  def parse(json: String): Either[String, Job] = {
-    val jv =
-      try JsonMethods.parse(json)
-      catch { case e: Exception => return Left(s"invalid JSON: ${e.getMessage}") }
-
-    def str(field: String): Either[String, String] = jv \ field match {
-      case JString(s) if s.nonEmpty => Right(s)
-      case JNothing => Left(s"missing required field: $field")
-      case other => Left(s"field $field must be a non-empty string, got $other")
-    }
-
+  private def parseUpsert(jv: JValue): Either[String, Job] =
     for {
-      input <- str("InputFile")
-      org <- str("TargetOrg")
-      pkg <- str("TargetPackage")
-      res <- str("TargetResource")
-      pkRaw <- str("PrimaryKey")
-      dedupe <- str("Dedupe").flatMap {
+      input <- reqStr(jv, "InputFile")
+      org <- reqStr(jv, "TargetOrg")
+      pkg <- reqStr(jv, "TargetPackage")
+      res <- reqStr(jv, "TargetResource")
+      pkRaw <- reqStr(jv, "PrimaryKey")
+      dedupe <- reqStr(jv, "Dedupe").flatMap {
         case d @ ("first" | "last") => Right(d)
         case d => Left(s"Dedupe must be 'first' or 'last', got '$d'")
       }
@@ -200,7 +190,6 @@ object Job {
     } yield Job(input, org, pkg, res,
       pkRaw.split(",").map(_.trim).filter(_.nonEmpty).toSeq,
       dedupe, truncate, stats)
-  }
 
   private def parseStats(items: List[JValue]): Either[String, Seq[StatSpec]] = {
     val parsed = items.map { item =>

@@ -10,17 +10,6 @@ import graft.StableRound
   */
 object Stats {
 
-  /** Quantile aggregate: exact `percentile` for oracle parity, or
-    * bounded-memory mergeable `approx_percentile` for the 100 TB path
-    * (both return the same array shape, so callers are mode-agnostic). */
-  private def pctExpr(c: String, pcts: String, exact: Boolean): Column =
-    // cast the input to double in BOTH modes: `percentile` always returns
-    // double, but `approx_percentile` preserves the input type, so an
-    // integer column would yield array<bigint> cells that break the stack()
-    // pivot's uniform-double contract in the approx path
-    if (exact) expr(s"percentile(cast($c as double), $pcts)")
-    else expr(s"approx_percentile(cast($c as double), $pcts, 10000)")
-
   /** EXACT linear-interpolated quantiles (the `percentile` /
     * `quantile_cont` definition: value at 0-based rank (n−1)·p, linear
     * between neighbors) computed by DISTRIBUTED VALUE COUNTING instead
@@ -140,58 +129,36 @@ object Stats {
     *
     * One distributed aggregation pass computes the moment/extreme cells
     * (partial aggs + single shuffle); quantiles come from
-    * [[exactQuantilesByCounting]] with `exact=true` (default — exact to
-    * the `quantile_cont` definition WITHOUT buffering raw columns) or
-    * from mergeable `approx_percentile` sketches with `exact=false`
-    * (rank error ≤ 1e-4·n). Either way nothing holds a raw column in
-    * RAM, and `stack` pivots the single row into stat rows — no
-    * driver-side collect (SURVEY §7 hard part 3). */
-  def describe(df: DataFrame, cols: Seq[String],
-      exact: Boolean = true): DataFrame = {
+    * [[exactQuantilesByCounting]] (exact to the `quantile_cont`
+    * definition WITHOUT buffering raw columns). Nothing holds a raw
+    * column in RAM, and `stack` pivots the single row into stat rows —
+    * no driver-side collect (SURVEY §7 hard part 3). */
+  def describe(df: DataFrame, cols: Seq[String]): DataFrame = {
     val aggs: Seq[Column] = cols.flatMap { c =>
       Seq(
         count(col(c)).cast("double").as(s"${c}__count"),
         StableRound.round6(avg(col(c))).as(s"${c}__mean"),
         round(stddev_samp(col(c)), 6).as(s"${c}__std"),
-        min(col(c)).cast("double").as(s"${c}__min")) ++
-      // approx mode keeps the mergeable sketch inside the same agg row;
-      // exact mode gets its quantiles from the counting relation below
-      (if (exact) Nil
-       else Seq(pctExpr(c, "array(0.25, 0.5, 0.75)", exact)
-         .as(s"${c}__pq"))) :+
-        max(col(c)).cast("double").as(s"${c}__max")
+        min(col(c)).cast("double").as(s"${c}__min"),
+        max(col(c)).cast("double").as(s"${c}__max"))
     }
-    val oneBase = df.agg(aggs.head, aggs.tail: _*)
-    val withQ =
-      if (exact) {
-        // materialize the ONE-ROW moment result and hand its
-        // min/max/count cells to the quantile core as the bounds
-        // relation — the quantile stats/targets subtrees then cost
-        // zero extra passes (guide §2.4; r18: runtime corpus scans
-        // 3 → 2, the 583k-row targets re-aggregation disappears).
-        // Non-eager (measured equal-or-better than eager at sf0.1), yet
-        // under AQE the checkpoint still runs the moment pass as its OWN
-        // SQL execution while this frame is built — traced queue_sweep
-        // attributes jobs to `localCheckpoint at Stats.scala` — not
-        // inside the query it feeds; the frame is one row, so either
-        // mode is storage-trivial
-        val one = oneBase.localCheckpoint(false)
-        val statsDf = one.selectExpr(s"stack(${cols.size}, " +
-          cols.map(c => s"'$c', `${c}__min`, `${c}__max`, " +
-            s"cast(`${c}__count` as bigint)").mkString(", ") +
-          ") AS (cn, mn, mx, n)")
-        one.crossJoin(exactQuantilesByCounting(df, cols,
-          statsDf = Some(statsDf)))
-      }
-      else oneBase.select(cols.flatMap { c =>
-        Seq(col(s"${c}__count"), col(s"${c}__mean"), col(s"${c}__std"),
-          col(s"${c}__min"),
-          element_at(col(s"${c}__pq"), 1).as(s"${c}__p25"),
-          element_at(col(s"${c}__pq"), 2).as(s"${c}__p50"),
-          element_at(col(s"${c}__pq"), 3).as(s"${c}__p75"),
-          col(s"${c}__max"))
-      }: _*)
-    val one = withQ
+    // materialize the ONE-ROW moment result and hand its min/max/count
+    // cells to the quantile core as the bounds relation — the quantile
+    // stats/targets subtrees then cost zero extra passes (guide §2.4;
+    // r18: runtime corpus scans 3 → 2, the 583k-row targets
+    // re-aggregation disappears). Non-eager (measured equal-or-better
+    // than eager at sf0.1), yet under AQE the checkpoint still runs the
+    // moment pass as its OWN SQL execution while this frame is built —
+    // traced queue_sweep attributes jobs to `localCheckpoint at
+    // Stats.scala` — not inside the query it feeds; the frame is one
+    // row, so either mode is storage-trivial
+    val moments = df.agg(aggs.head, aggs.tail: _*).localCheckpoint(false)
+    val statsDf = moments.selectExpr(s"stack(${cols.size}, " +
+      cols.map(c => s"'$c', `${c}__min`, `${c}__max`, " +
+        s"cast(`${c}__count` as bigint)").mkString(", ") +
+      ") AS (cn, mn, mx, n)")
+    val one = moments.crossJoin(exactQuantilesByCounting(df, cols,
+        statsDf = Some(statsDf)))
       .select(cols.flatMap { c =>
         Seq(col(s"${c}__count"), col(s"${c}__mean"), col(s"${c}__std"),
           col(s"${c}__min"),
@@ -233,8 +200,7 @@ object Stats {
     * one shuffle, not k). Both sides reduce to a single row before the
     * final stack pivot — no driver collect anywhere.
     */
-  def describeAll(df: DataFrame, cols: Seq[String],
-      exact: Boolean = true): DataFrame = {
+  def describeAll(df: DataFrame, cols: Seq[String]): DataFrame = {
     import org.apache.spark.sql.types._
     val dt = cols.map(c => c -> df.schema(c).dataType).toMap
     val numCols = cols.filter(c => dt(c).isInstanceOf[NumericType])
@@ -244,15 +210,10 @@ object Stats {
 
     val aggs: Seq[Column] = cols.flatMap { c =>
       val base = Seq(count(col(c)).as(s"${c}__count"))
-      if (numCols.contains(c)) base ++ (Seq(
+      if (numCols.contains(c)) base ++ Seq(
         StableRound.round6(avg(col(c))).as(s"${c}__mean"),
         round(stddev_samp(col(c)), 6).as(s"${c}__std"),
-        min(col(c)).cast("double").as(s"${c}__min")) ++
-        // exact quantiles come from the counting relation (see
-        // exactQuantilesByCounting); approx keeps the mergeable sketch
-        (if (exact) Nil
-         else Seq(pctExpr(c, "array(0.25, 0.5, 0.75)", exact)
-           .as(s"${c}__pq"))) :+
+        min(col(c)).cast("double").as(s"${c}__min"),
         max(col(c)).cast("double").as(s"${c}__max"))
       else if (tsCols.contains(c)) base ++ Seq(
         expr(s"timestamp_seconds(sum(unix_seconds(cast($c as timestamp)))" +
@@ -265,7 +226,7 @@ object Stats {
     }
     val one0 = df.agg(aggs.head, aggs.tail: _*)
     val one =
-      if (exact && numCols.nonEmpty) {
+      if (numCols.nonEmpty) {
         // same bounds handoff as describe(): the one-row moment pass
         // already carries min/max/count per numeric column (non-eager,
         // yet executed as its own SQL execution while the frame is
@@ -326,12 +287,7 @@ object Stats {
             val suffix = stat match {
               case "25%" => "p25"; case "50%" => "p50"; case _ => "p75"
             }
-            val q =
-              if (exact) col(s"${c}__$suffix")
-              else element_at(col(s"${c}__pq"), stat match {
-                case "25%" => 1; case "50%" => 2; case _ => 3
-              })
-            decStr(round(q, 6))
+            decStr(round(col(s"${c}__$suffix"), 6))
           } else nullStr
         case "max" =>
           if (isNum) decStr(col(s"${c}__max"))

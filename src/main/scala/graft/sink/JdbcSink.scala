@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   *
   * Upserts run distributed: `df.foreachPartition` opens one connection per
   * partition and executes batched upsert statements (Postgres
-  * `INSERT ... ON CONFLICT DO UPDATE`, Derby `MERGE INTO`). For Postgres,
+  * `INSERT ... ON CONFLICT DO UPDATE`, Derby DELETE-by-PK then INSERT,
+  * both through one batched writer). For Postgres,
   * pair with `reWriteBatchedInserts=true` in the URL. At cluster scale the
   * parallelism knob is the DataFrame's partition count — repartition to the
   * sink's connection budget before writing.
@@ -129,29 +130,74 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     if (isDerby) s"""DELETE FROM "$table""""
     else s"""TRUNCATE TABLE "$table""""
 
+  private def insertSql(table: String, cols: Seq[String]): String =
+    s"""INSERT INTO "$table" (${cols.map(c => s""""$c"""").mkString(", ")}) """ +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
+
+  private def deleteByPkSql(table: String, pk: Seq[String]): String =
+    s"""DELETE FROM "$table" WHERE """ +
+      pk.map(c => s""""$c" = ?""").mkString(" AND ")
+
   /** Dialect upsert statements: Postgres = one `INSERT … ON CONFLICT DO
     * UPDATE` (second element null); Derby (test dialect, rejects MERGE
     * from a VALUES source) = (DELETE-by-PK, INSERT) executed as batched
     * pairs in one transaction. Exposed for spec coverage — the Postgres
     * branch has no live server in the test environment. */
   private[graft] def upsertSql(table: String, cols: Seq[String],
-      pk: Seq[String]): (String, String) = {
-    val q = cols.map(c => s""""$c"""")
-    val insSql =
-      s"""INSERT INTO "$table" (${q.mkString(", ")}) """ +
-        s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    if (isDerby) {
-      val delSql = s"""DELETE FROM "$table" WHERE """ +
-        pk.map(c => s""""$c" = ?""").mkString(" AND ")
-      (delSql, insSql)
-    } else {
+      pk: Seq[String]): (String, String) =
+    if (isDerby) (deleteByPkSql(table, pk), insertSql(table, cols))
+    else {
       val conflict = pk.map(c => s""""$c"""").mkString(", ")
       val nonPk = cols.filterNot(pk.contains)
       val action =
         if (nonPk.nonEmpty) "DO UPDATE SET " +
           nonPk.map(c => s""""$c" = EXCLUDED."$c"""").mkString(", ")
         else "DO NOTHING"
-      (insSql + s" ON CONFLICT ($conflict) $action", null)
+      (insertSql(table, cols) + s" ON CONFLICT ($conflict) $action", null)
+    }
+
+  private def pkIndices(cols: Array[String], pk: Seq[String]): Array[Int] = {
+    val idx = pk.map(cols.indexOf(_)).toArray
+    require(!idx.contains(-1), s"pk $pk not in ${cols.mkString(",")}")
+    idx
+  }
+
+  /** The one batched write loop: each partition runs as one
+    * [[transaction]]; every row binds each statement's parameters from
+    * its listed columns (nulls via `setNull` of the column's JDBC type)
+    * and adds it to that statement's batch. Every `batchSize` rows, and
+    * at the end, the batches execute in list order — so a Derby upsert's
+    * deletes of a batch always run before its inserts. */
+  private def writeBatched(df: DataFrame,
+      statements: Seq[(String, Array[Int])], batchSize: Int): Unit = {
+    val types = df.schema.fields.map(f => jdbcType(f.dataType))
+    val sqls = statements.map(_._1).toArray
+    val binds = statements.map(_._2).toArray
+    val self = this
+    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      if (rows.nonEmpty) self.transaction { c =>
+        val ps = sqls.map(c.prepareStatement)
+        var n = 0
+        rows.foreach { row =>
+          var k = 0
+          while (k < ps.length) {
+            val cols = binds(k)
+            var j = 0
+            while (j < cols.length) {
+              val v = row.get(cols(j))
+              if (v == null) ps(k).setNull(j + 1, types(cols(j)))
+              else ps(k).setObject(j + 1, self.coerce(v))
+              j += 1
+            }
+            ps(k).addBatch()
+            k += 1
+          }
+          n += 1
+          if (n % batchSize == 0) ps.foreach(_.executeBatch())
+        }
+        ps.foreach(_.executeBatch())
+        ps.foreach(_.close())
+      }
     }
   }
 
@@ -165,57 +211,13 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     * semantics. */
   def upsert(df: DataFrame, table: String, pk: Seq[String],
       batchSize: Int = 500): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames
-    val types = schema.fields.map(f => jdbcType(f.dataType))
-    val pkIdx = pk.map(cols.indexOf(_)).toArray
-    require(!pkIdx.contains(-1), s"pk $pk not in ${cols.mkString(",")}")
+    val cols = df.schema.fieldNames
+    val pkIdx = pkIndices(cols, pk)
+    val all = cols.indices.toArray
     val (sql1, sql2) = upsertSql(table, cols.toSeq, pk)
-    val self = this
-    val twoPhase = sql2 != null
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) self.transaction { c =>
-        val ps1 = c.prepareStatement(sql1)
-        val ps2 = if (twoPhase) c.prepareStatement(sql2) else null
-        var n = 0
-        rows.foreach { row =>
-          if (twoPhase) {
-            // derby: delete by PK, then insert the full row
-            var j = 0
-            while (j < pkIdx.length) {
-              ps1.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
-            }
-            ps1.addBatch()
-            var i = 0
-            while (i < cols.length) {
-              val v = row.get(i)
-              if (v == null) ps2.setNull(i + 1, types(i))
-              else ps2.setObject(i + 1, coerce(v))
-              i += 1
-            }
-            ps2.addBatch()
-          } else {
-            var i = 0
-            while (i < cols.length) {
-              val v = row.get(i)
-              if (v == null) ps1.setNull(i + 1, types(i))
-              else ps1.setObject(i + 1, coerce(v))
-              i += 1
-            }
-            ps1.addBatch()
-          }
-          n += 1
-          if (n % batchSize == 0) {
-            ps1.executeBatch()
-            if (twoPhase) ps2.executeBatch()
-          }
-        }
-        ps1.executeBatch()
-        if (twoPhase) ps2.executeBatch()
-        ps1.close()
-        if (twoPhase) ps2.close()
-      }
-    }
+    writeBatched(df,
+      if (isDerby) Seq(sql1 -> pkIdx, sql2 -> all) else Seq(sql1 -> all),
+      batchSize)
   }
 
   /** Plain batched INSERT — for loading into a table KNOWN empty of the
@@ -223,32 +225,9 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     * the statements of the Derby two-phase [[upsert]]; PK conflicts are
     * NOT handled (that is upsert's job). */
   def insert(df: DataFrame, table: String, batchSize: Int = 500): Unit = {
-    val schema = df.schema
-    val cols = schema.fieldNames
-    val types = schema.fields.map(f => jdbcType(f.dataType))
-    val sql = s"""INSERT INTO "$table" (${cols.map(c => s""""$c"""").mkString(", ")}) """ +
-      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
-    val self = this
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) self.transaction { c =>
-        val ps = c.prepareStatement(sql)
-        var n = 0
-        rows.foreach { row =>
-          var i = 0
-          while (i < cols.length) {
-            val v = row.get(i)
-            if (v == null) ps.setNull(i + 1, types(i))
-            else ps.setObject(i + 1, coerce(v))
-            i += 1
-          }
-          ps.addBatch()
-          n += 1
-          if (n % batchSize == 0) ps.executeBatch()
-        }
-        ps.executeBatch()
-        ps.close()
-      }
-    }
+    val cols = df.schema.fieldNames
+    writeBatched(df, Seq(insertSql(table, cols.toSeq) -> cols.indices.toArray),
+      batchSize)
   }
 
   /** Delete by primary key — the D half of a CDC apply. `df` needs only
@@ -256,31 +235,10 @@ case class JdbcSink(url: String, user: String = "", password: String = "")
     * one connection per partition. Deleting an absent key is a no-op, so
     * replayed micro-batches stay idempotent. */
   def delete(df: DataFrame, table: String, pk: Seq[String],
-      batchSize: Int = 500): Unit = {
-    val cols = df.schema.fieldNames
-    val pkIdx = pk.map(cols.indexOf(_)).toArray
-    require(!pkIdx.contains(-1), s"pk $pk not in ${cols.mkString(",")}")
-    val sql = s"""DELETE FROM "$table" WHERE """ +
-      pk.map(c => s""""$c" = ?""").mkString(" AND ")
-    val self = this
-    df.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-      if (rows.nonEmpty) self.transaction { c =>
-        val ps = c.prepareStatement(sql)
-        var n = 0
-        rows.foreach { row =>
-          var j = 0
-          while (j < pkIdx.length) {
-            ps.setObject(j + 1, coerce(row.get(pkIdx(j)))); j += 1
-          }
-          ps.addBatch()
-          n += 1
-          if (n % batchSize == 0) ps.executeBatch()
-        }
-        ps.executeBatch()
-        ps.close()
-      }
-    }
-  }
+      batchSize: Int = 500): Unit =
+    writeBatched(df,
+      Seq(deleteByPkSql(table, pk) -> pkIndices(df.schema.fieldNames, pk)),
+      batchSize)
 
   /** Read the accumulated table back (the reference re-downloads the whole
     * resource over HTTP for stats, `datapump.py:375-376`; here it's a

@@ -178,6 +178,30 @@ class CorpusStreamJobSpec extends SparkSpec {
     assert(keptIds(corpus) == ((1L to 30L) ++ (41L to 50L)).toSet)
   }
 
+  test("a batch overlapping a bootstrap head's kept ids fails the " +
+      "ordering gate instead of being skipped as a replay") {
+    val baseDir = tmp("graft_cs_obase")
+    mkDocs(1L to 30L).coalesce(1).write.mode("overwrite")
+      .parquet(s"$baseDir/documents.parquet")
+    val (corpus, stateRoot) = (tmp("graft_cs_ocorpus"), tmp("graft_cs_ostate"))
+    IncrementalCorpusJob.bootstrap(spark, baseDir, corpus,
+      s"$stateRoot/snap=0", minTokens = 1, maxTokens = 10000,
+      minQuality = 0.0, numShards = 2)
+    assert(keptIds(corpus) == (1L to 30L).toSet)
+    // covers gen 0's whole kept range plus 5 new docs: gen 0 records no
+    // batch envelope, so this is no replay — skipping it would lose
+    // docs 31-35 for good
+    val e = intercept[IllegalArgumentException] {
+      CorpusStreamJob.ingestBatch(spark, mkDocs(1L to 35L), corpus,
+        stateRoot, openKnobs)
+    }
+    assert(e.getMessage.contains("doc-id order"), e.getMessage)
+    assert(keptIds(corpus) == (1L to 30L).toSet)
+    assert(CorpusStreamJob.chainDirs(spark, stateRoot) ==
+      Seq(s"$stateRoot/snap=0"))
+    assert(!Files.exists(Paths.get(s"$corpus.staging/gen=1")))
+  }
+
   test("ingestBatch refuses to stream into an un-bootstrapped state " +
       "root") {
     val e = intercept[IllegalArgumentException] {

@@ -94,7 +94,7 @@ class IncrementalCorpusJobSpec extends SparkSpec {
     // the chain facts (bloom sizing, ordering check, fetch pruning)
     // cost a driver-side JSON read, never a state-chain pass
     val metas = IncrementalCorpusJob.readChainMeta(
-      spark, Seq(st0, st1, st2)).get
+      spark, Seq(st0, st1, st2))
     assert(metas.map(_.gen).sorted == Seq(0, 1, 2), metas.toString)
     for (m <- metas) {
       val keys = spark.read.parquet(
@@ -151,7 +151,7 @@ class IncrementalCorpusJobSpec extends SparkSpec {
       assert(chain.exceptAll(compacted).count() == 0, t)
       assert(compacted.exceptAll(chain).count() == 0, t)
     }
-    assert(IncrementalCorpusJob.readChainMeta(spark, Seq(stC)).get
+    assert(IncrementalCorpusJob.readChainMeta(spark, Seq(stC))
       .sortBy(_.gen) == metas.sortBy(_.gen))
 
     // id-ordering contract is enforced, not assumed
@@ -299,7 +299,7 @@ class IncrementalCorpusJobSpec extends SparkSpec {
     assert(IncrementalCorpusJob.recover(spark, corpus, 1, st1)
       == "state-rebuilt")
     assert(spark.read.parquet(s"$st1/keys").count() == 1)
-    assert(IncrementalCorpusJob.readChainMeta(spark, Seq(st1)).get
+    assert(IncrementalCorpusJob.readChainMeta(spark, Seq(st1))
       == Seq(IncrementalCorpusJob.GenMeta(1, 1L, 10L, 10L)))
 
     // --- kill window: staged but no snapshot → roll back (re-run the
@@ -335,6 +335,39 @@ class IncrementalCorpusJobSpec extends SparkSpec {
         corpus, Seq(st0, st1, st2, st3), tmp("graft_cr5"))
     }
     assert(dup.getMessage.contains("already exists"), dup.getMessage)
+  }
+
+  test("a snapshot without meta.json fails ingestDelta, the stream run " +
+      "and compaction, each naming the snapshot dir") {
+    import java.nio.file.{Files, Paths}
+    import graft.jobs.CorpusStreamJob
+    val corpus = tmp("graft_nometa") + "/corpus"
+    val stateRoot = tmp("graft_nometa_state")
+    IncrementalCorpusJob.bootstrap(spark,
+      writeDocsDir(mk(1L -> doc2(1))), corpus, s"$stateRoot/snap=0")
+    IncrementalCorpusJob.ingestDelta(spark, mk(10L -> doc2(41)), 1,
+      corpus, Seq(s"$stateRoot/snap=0"), s"$stateRoot/snap=1")
+    val chain = CorpusStreamJob.chainDirs(spark, stateRoot)
+    val bare = s"$stateRoot/snap=1"
+    assert(chain == Seq(s"$stateRoot/snap=0", bare), chain.toString)
+    Files.delete(Paths.get(s"$bare/meta.json"))
+
+    val delta = intercept[IllegalStateException] {
+      IncrementalCorpusJob.ingestDelta(spark, mk(20L -> doc2(81)), 2,
+        corpus, chain, tmp("graft_nometa_out"))
+    }
+    assert(delta.getMessage.contains(bare), delta.getMessage)
+    assert(!Files.exists(Paths.get(s"$corpus/gen=2")))
+    val stream = intercept[IllegalStateException] {
+      CorpusStreamJob.run(spark, tmp("graft_nometa_landing"), corpus,
+        stateRoot, tmp("graft_nometa_ckpt"))
+    }
+    assert(stream.getMessage.contains(bare), stream.getMessage)
+    val compact = intercept[IllegalStateException] {
+      CorpusStreamJob.compactChain(spark, stateRoot)
+    }
+    assert(compact.getMessage.contains(bare), compact.getMessage)
+    assert(CorpusStreamJob.chainDirs(spark, stateRoot) == chain)
   }
 
   test("every DeltaReport field equals a direct recount, on a mixed " +
@@ -418,7 +451,7 @@ class IncrementalCorpusJobSpec extends SparkSpec {
           val c = tmp("graft_ccC")
           IncrementalCorpusJob.compactState(spark, Seq(st(0), st(1)), c)
           // the merged meta carries both covered generations
-          assert(IncrementalCorpusJob.readChainMeta(spark, Seq(c)).get
+          assert(IncrementalCorpusJob.readChainMeta(spark, Seq(c))
             .map(_.gen).sorted == Seq(0, 1))
           Seq(c)
         } else Seq(st(0), st(1))

@@ -6,22 +6,22 @@ import graft.sink.JdbcSink
 
 class JobRunnerSpec extends SparkSpec {
 
-  test("Job.parse validates required fields, enum, and defaults") {
-    val ok = Job.parse(
+  test("Job.parseAny validates required fields, enum, and defaults") {
+    val ok = Job.parseAny(
       """{"InputFile":"/tmp/x/*.csv","TargetOrg":"o","TargetPackage":"p",
         |"TargetResource":"r","PrimaryKey":"DateTime,Sensor_id",
         |"Dedupe":"last"}""".stripMargin)
     assert(ok.isRight)
-    val j = ok.toOption.get
+    val j = ok.toOption.collect { case j: Job => j }.get
     assert(j.primaryKey == Seq("DateTime", "Sensor_id"))
     assert(!j.truncate && j.stats.isEmpty) // defaults (ref bug 2 fixed)
 
-    assert(Job.parse("""{"InputFile":"x"}""").isLeft) // missing fields
-    assert(Job.parse(
+    assert(Job.parseAny("""{"InputFile":"x"}""").isLeft) // missing fields
+    assert(Job.parseAny(
       """{"InputFile":"x","TargetOrg":"o","TargetPackage":"p",
         |"TargetResource":"r","PrimaryKey":"k","Dedupe":"newest"}"""
         .stripMargin).isLeft) // bad enum
-    assert(Job.parse("not json").isLeft)
+    assert(Job.parseAny("not json").isLeft)
   }
 
   test("end-to-end: queue sweep dedupes, upserts, stats, archives") {
@@ -383,7 +383,7 @@ class JobRunnerSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(landed == Seq(1L, 2L, 10L))
     val metas = graft.jobs.IncrementalCorpusJob
-      .readChainMeta(spark, Seq(st0, st1)).get
+      .readChainMeta(spark, Seq(st0, st1))
     assert(metas.map(m => (m.gen, m.nKeys)).sorted == Seq((0, 2L), (1, 1L)))
 
     // one-shot archive semantics: corpus job FILES moved out of the

@@ -19,24 +19,6 @@ class StatsSpec extends SparkSpec {
     assert(got("max") == 4.0)
   }
 
-  test("describe: exact=false (approx quantiles) works on integer columns") {
-    // approx_percentile preserves its input type, so without the internal
-    // double cast an integer column yields array<bigint> quantile cells
-    // and the stack() pivot fails analysis — this pins the approx path
-    // on exactly that shape
-    val df = Seq(1L, 2L, 3L, 4L, 5L).toDF("n")
-    val got = Stats.describe(df, Seq("n"), exact = false)
-      .as[(String, Double)].collect().toMap
-    assert(got("count") == 5.0)
-    assert(got("mean") == 3.0)
-    assert(got("min") == 1.0)
-    assert(got("max") == 5.0)
-    // approx_percentile at accuracy 10000 is exact on 5 values; it picks
-    // an actual element (no interpolation), so 50% is the true median
-    assert(got("50%") == 3.0)
-    assert(got("25%") >= 1.0 && got("25%") <= 3.0)
-  }
-
   test("describeAll: unique/top/freq + per-class cell applicability") {
     import java.sql.Timestamp
     val df = Seq(
